@@ -173,6 +173,38 @@ def test_plan_has_pushed_filter_and_pruned_schema(spark, turns, tmp_path):
     assert "role" not in plan.split("ReadSchema")[1][:200]
 
 
+def test_extraction_plans_have_one_python_node_and_no_exchange(
+        spark, turns, tmp_path):
+    """Over a parquet scan, the direct and the web extraction plans, alone
+    and under a downstream explode of ``materials``, evaluate the kernel
+    in exactly one Arrow-batched Python node and never shuffle. The
+    explode is the case the UDF's non-deterministic flag guards: an
+    inferred size(materials) > 0 filter must not clone the Python
+    stage."""
+    from pyspark.sql import functions as F
+
+    from material_parsers_spark.pipeline.extraction import extract_ordered
+    from material_parsers_spark.pipeline.web import (
+        extract_materials_from_html,
+        wrap_turns_in_html,
+    )
+
+    path = str(tmp_path / "turns.parquet")
+    pages_path = str(tmp_path / "pages.parquet")
+    turns.write.mode("overwrite").parquet(path)
+    wrap_turns_in_html(turns).write.mode("overwrite").parquet(pages_path)
+    direct = extract_ordered(spark.read.parquet(path), include_tokens=False)
+    web = extract_materials_from_html(spark.read.parquet(pages_path))
+    for out in (direct, web):
+        exploded = out.select("conv_id", "turn_idx",
+                              F.explode("materials").alias("material"))
+        for df in (out, exploded):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("ArrowEvalPython") == 1, plan
+            assert "BatchEvalPython" not in plan, plan
+            assert "Exchange" not in plan, plan
+
+
 def test_checkpoint_crash_window_reconciles_orphans(spark, turns):
     """Crash between the parquet commit and the manifest write: the
     orphan bucket data must be deleted and reprocessed on resume — the

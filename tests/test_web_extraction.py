@@ -122,6 +122,25 @@ def test_web_extraction_equals_direct_extraction(spark, turns):
     assert _json.loads(_json.dumps(a)) == _json.loads(_json.dumps(b))
 
 
+def test_chrome_only_page_yields_no_row(spark):
+    """A page whose every block is boilerplate (nav, link sidebar,
+    footer) has no main text, so the web path emits no row for it; a
+    page with an article emits one."""
+    chrome_only = (
+        '<html><body><nav><a href="/">Home</a> <a href="/docs">Docs</a>'
+        '</nav><div class="sidebar"><ul>'
+        '<li><a href="/c/1">Related conversation one</a></li>'
+        '<li><a href="/c/2">Related conversation two</a></li>'
+        '</ul></div><footer>Copyright notice. All rights reserved. '
+        '<a href="/tos">Terms</a></footer></body></html>'
+    )
+    pages = spark.createDataFrame(
+        [("c", 0, chrome_only), ("c", 1, PAGE)],
+        "conv_id string, turn_idx int, text string")
+    rows = extract_materials_from_html(pages).collect()
+    assert [(r.conv_id, r.turn_idx) for r in rows] == [("c", 1)]
+
+
 class TestFastScannerDifferential:
     """The compiled-regex scanner must produce byte-identical blocks to
     the html.parser reference implementation."""
