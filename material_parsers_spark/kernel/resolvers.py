@@ -183,6 +183,8 @@ def assign_in_order(entities1: List[MergedToken],
                     entities2: List[MergedToken]) -> List[tuple]:
     """J4: positional pairing for "respectively" sentences, trimming the
     longer list head/tail depending on which side comes first."""
+    if not entities1 or not entities2:
+        return []
     if len(entities1) == len(entities2):
         return assign_relationship_in_order(entities1, entities2)
     if len(entities1) > len(entities2):

@@ -282,22 +282,18 @@ def html_blocks(html: str) -> List[dict]:
     return blocks
 
 
-def is_content_block(block: dict,
-                     min_chars: int = MIN_BLOCK_CHARS,
-                     max_link_density: float = MAX_LINK_DENSITY) -> bool:
+def is_content_block(block: dict) -> bool:
     """Boilerpipe-style keep rule: long enough, not link-dominated, not
     navigation chrome."""
     if block["in_chrome"]:
         return False
-    if block["n_chars"] < min_chars:
+    if block["n_chars"] < MIN_BLOCK_CHARS:
         return False
     link_density = block["link_chars"] / block["n_chars"]
-    return link_density <= max_link_density
+    return link_density <= MAX_LINK_DENSITY
 
 
-def main_content(html: Optional[str],
-                 min_chars: int = MIN_BLOCK_CHARS,
-                 max_link_density: float = MAX_LINK_DENSITY) -> dict:
+def main_content(html: Optional[str]) -> dict:
     """Strip boilerplate from one HTML fragment.
 
     Returns ``{text, n_blocks, kept_blocks, dropped_chars}``. The
@@ -308,7 +304,7 @@ def main_content(html: Optional[str],
     however short. Chrome membership needs no cross-block comparison,
     so a fragment that is ENTIRELY nav/footer chrome is still dropped
     even as a single block. In a multi-block page, a main block below
-    ``min_chars`` IS dropped like any other short block — that is the
+    ``MIN_BLOCK_CHARS`` IS dropped like any other short block — that is the
     classifier working as designed, not a pass-through guarantee.
     """
     if not html:
@@ -322,8 +318,7 @@ def main_content(html: Optional[str],
     if len(blocks) == 1:
         kept = [b for b in blocks if not b["in_chrome"]]
     else:
-        kept = [b for b in blocks
-                if is_content_block(b, min_chars, max_link_density)]
+        kept = [b for b in blocks if is_content_block(b)]
     dropped = sum(b["n_chars"] for b in blocks) - \
         sum(b["n_chars"] for b in kept)
     return {

@@ -3,8 +3,8 @@
 Spark re-expression of the reference's /process/material + /process/link
 flows (SURVEY.md §3.1-3.2): one Arrow-batched pandas UDF per turn running
 the pure kernel, with the dictionary trie broadcast once. The hot path is
-shuffle-free — per-turn rows are independent; the only shuffles are the
-optional output ordering and rollups.
+shuffle-free — per-turn rows are independent; the only shuffle is the
+rollup.
 
 Plan shape (verified via .explain): parquet scan with pushed filters and a
 two-column ReadSchema -> WholeStageCodegen filter -> ArrowEvalPython ->
@@ -14,19 +14,14 @@ project. No groupBy, no join, no window in the hot path.
 from __future__ import annotations
 
 import json
-import os
 from functools import lru_cache
-from typing import Iterator, Optional
+from typing import Callable, Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel.gazetteer import (
-    TokenTrieMatcher,
-    crystal_structure_patterns,
-    space_group_patterns,
-)
+from ..kernel.gazetteer import crystal_structure_patterns, space_group_patterns
 from .schemas import EXTRACTION_TYPE
 
 # tiny curated dictionary kept for fast kernel tests
@@ -74,31 +69,37 @@ def load_full_patterns() -> list:
     return list(_full_patterns_cached())
 
 
-def run_extraction(turns: DataFrame,
-                   patterns: Optional[list] = None,
-                   include_tokens: bool = True) -> DataFrame:
-    """Append an ``extraction`` struct column (tokens, spans, materials).
+# the extraction of an empty text: null spans mark the row for removal
+_NO_TEXT = {"tokens": None, "spans": None, "materials": None}
 
-    The matcher trie is built per executor from the broadcast pattern list
-    (cheap, built once per python worker via closure caching).
-    ``include_tokens=False`` halves the Arrow payload for consumers that
-    only read spans/materials.
-    """
-    spark = turns.sparkSession
+
+def _extract(turns: DataFrame, patterns: Optional[list],
+             include_tokens: bool,
+             text_of: Optional[Callable[[str], str]] = None) -> DataFrame:
+    """Append the ``extraction`` column through the one extraction UDF,
+    keeping only rows with text.
+
+    The pattern list is broadcast once and the matcher trie built once
+    per Python worker. ``text_of`` maps each input value to the text the
+    kernel reads (the web path passes its main-content strip). The cheap
+    null/empty filter runs JVM-side before any Python is invoked; a text
+    that only turns out empty in Python comes back with null spans and is
+    dropped after the UDF."""
     pattern_list = patterns if patterns is not None else load_full_patterns()
-    broadcast_patterns = spark.sparkContext.broadcast(pattern_list)
-    with_tokens = include_tokens
+    broadcast_patterns = turns.sparkSession.sparkContext.broadcast(
+        pattern_list)
 
     @F.pandas_udf(EXTRACTION_TYPE)
     def extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         # imports inside the UDF so executors resolve them locally
-        from ..kernel.gazetteer import TokenTrieMatcher as _Matcher
-        from ..kernel.turns import extract_turn as _extract
+        from ..kernel.gazetteer import TokenTrieMatcher
+        from ..kernel.turns import extract_turn
 
-        matcher = _Matcher(broadcast_patterns.value)
+        matcher = TokenTrieMatcher(broadcast_patterns.value)
         for series in batches:
-            rows = [_extract(text, matcher, include_tokens=with_tokens)
-                    for text in series]
+            texts = series if text_of is None else map(text_of, series)
+            rows = [extract_turn(text, matcher, include_tokens=include_tokens)
+                    if text else _NO_TEXT for text in texts]
             yield pd.DataFrame(rows, columns=["tokens", "spans", "materials"])
 
     # The kernel is deterministic, but the non-deterministic flag stops
@@ -107,118 +108,47 @@ def run_extraction(turns: DataFrame,
     # re-evaluates the whole Python stage a second time (observed via
     # .explain: two ArrowEvalPython nodes for one query).
     extract_udf = extract_udf.asNondeterministic()
-
-    # column pruning: only (conv_id, turn_idx, text) feed the kernel; the
-    # cheap null/empty filter runs JVM-side before any Python is invoked
     return (
         turns
         .where(F.col("text").isNotNull() & (F.length("text") > 0))
         .withColumn("extraction", extract_udf(F.col("text")))
+        .where(F.col("extraction.spans").isNotNull())
     )
 
 
-def ordered_output(extracted: DataFrame) -> DataFrame:
-    """Stable (conv_id, turn_idx) ordering with a global row_number —
-    the per-turn invariant surface (north rule)."""
-    window = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return (
-        extracted
-        .withColumn("turn_rank", F.row_number().over(window))
-        .select(
-            "conv_id", "turn_idx", "turn_rank",
-            F.col("extraction.tokens").alias("tokens"),
-            F.col("extraction.spans").alias("spans"),
-            F.col("extraction.materials").alias("materials"),
-        )
-    )
+def run_extraction(turns: DataFrame,
+                   patterns: Optional[list] = None,
+                   include_tokens: bool = True) -> DataFrame:
+    """Append an ``extraction`` struct column (tokens, spans, materials).
+
+    ``include_tokens=False`` halves the Arrow payload for consumers that
+    only read spans/materials.
+    """
+    return _extract(turns, patterns, include_tokens)
 
 
-def extract_ordered(turns: DataFrame,
-                    patterns: Optional[list] = None,
-                    include_tokens: bool = True,
-                    dense_turn_idx: bool = True) -> DataFrame:
-    """Per-turn extraction with a stable per-conversation rank.
-
-    ``dense_turn_idx=True`` (the input contract: turn_idx is the dense
-    0-based order within its conversation, which the stable-ordering
-    invariant keys on) derives ``turn_rank = turn_idx + 1`` as a pure
-    column expression — the hot path then has ZERO shuffles: scan ->
-    JVM filter -> Arrow UDF. Input rows are not conversation-grouped at
-    the scan, so skew needs no rebalancing either.
-
-    With ``dense_turn_idx=False`` (sparse/unordered turn_idx) the rank
-    comes from a window over the NARROW (conv_id, turn_idx, text) frame
-    before the UDF — the shuffle moves ~3 columns, never the nested
-    extraction payload — followed by a round-robin rebalance so no
-    straggler task carries a whole hot conversation through Python."""
-    narrow = (
-        turns.select("conv_id", "turn_idx", "text")
-        .where(F.col("text").isNotNull() & (F.length("text") > 0))
-    )
-    if dense_turn_idx:
-        narrow = narrow.withColumn(
-            "turn_rank", (F.col("turn_idx") + F.lit(1)).cast("int"))
-    else:
-        window = Window.partitionBy("conv_id").orderBy("turn_idx")
-        n_parts = turns.sparkSession.sparkContext.defaultParallelism * 4
-        narrow = (
-            narrow.withColumn("turn_rank", F.row_number().over(window))
-            .repartition(n_parts)
-        )
-    return run_extraction(narrow, patterns,
-                          include_tokens=include_tokens).select(
-        "conv_id", "turn_idx", "turn_rank",
+def _ordered(extracted: DataFrame) -> DataFrame:
+    """The per-turn output surface (conv_id, turn_idx, turn_rank, tokens,
+    spans, materials). Under the input contract (turn_idx is the dense
+    0-based order within its conversation) ``turn_rank = turn_idx + 1``
+    is a pure column expression, so the plan has ZERO shuffles: scan ->
+    JVM filter -> Arrow UDF."""
+    return extracted.select(
+        "conv_id", "turn_idx",
+        (F.col("turn_idx") + F.lit(1)).cast("int").alias("turn_rank"),
         F.col("extraction.tokens").alias("tokens"),
         F.col("extraction.spans").alias("spans"),
         F.col("extraction.materials").alias("materials"),
     )
 
 
-def extract_ordered_deduped(turns: DataFrame,
-                            patterns: Optional[list] = None,
-                            include_tokens: bool = False,
-                            dense_turn_idx: bool = True) -> DataFrame:
-    """``extract_ordered`` with cross-row common-subexpression
-    elimination: the Python kernel runs ONCE PER DISTINCT TEXT and the
-    results join back to every occurrence.
-
-    Real transcript corpora repeat turn texts heavily (canned tool
-    output, empty replies, boilerplate greetings); at 10^12 turns the
-    kernel cost becomes O(distinct texts) instead of O(turns) while the
-    added cost is one distinct + one hash join, both keyed on the
-    128-bit md5 of the text (collision odds negligible; the join never
-    shuffles the raw text on the probe side). Prefer the direct
-    zero-shuffle ``extract_ordered`` when texts are mostly unique — the
-    two shuffles only pay for themselves past ~2x average duplication.
-
-    Output rows are identical to ``extract_ordered`` (parity-tested)."""
-    narrow = (
-        turns.select("conv_id", "turn_idx", "text")
-        .where(F.col("text").isNotNull() & (F.length("text") > 0))
-        .withColumn("text_hash", F.md5("text"))
-    )
-    if dense_turn_idx:
-        narrow = narrow.withColumn(
-            "turn_rank", (F.col("turn_idx") + F.lit(1)).cast("int"))
-    else:
-        window = Window.partitionBy("conv_id").orderBy("turn_idx")
-        narrow = narrow.withColumn("turn_rank", F.row_number().over(window))
-
-    distinct = narrow.select("text_hash", "text") \
-        .dropDuplicates(["text_hash"])
-    per_text = run_extraction(distinct, patterns,
-                              include_tokens=include_tokens) \
-        .select("text_hash", "extraction")
-    return (
-        narrow.drop("text")
-        .join(per_text, "text_hash")
-        .select(
-            "conv_id", "turn_idx", "turn_rank",
-            F.col("extraction.tokens").alias("tokens"),
-            F.col("extraction.spans").alias("spans"),
-            F.col("extraction.materials").alias("materials"),
-        )
-    )
+def extract_ordered(turns: DataFrame,
+                    patterns: Optional[list] = None,
+                    include_tokens: bool = True) -> DataFrame:
+    """Per-turn extraction with a stable per-conversation rank. Column
+    pruning: only (conv_id, turn_idx, text) feed the kernel."""
+    narrow = turns.select("conv_id", "turn_idx", "text")
+    return _ordered(run_extraction(narrow, patterns, include_tokens))
 
 
 def span_counts_per_conversation(extracted: DataFrame,
@@ -248,17 +178,3 @@ def span_counts_per_conversation(extracted: DataFrame,
             F.sum("materials_partial").alias("n_materials"),
         )
     )
-
-
-def observe_counters(turns: DataFrame):
-    """Attach an Observation collecting pipeline counters (rows in, null
-    texts) without a separate pass (`df.observe`, SURVEY.md §4 item 4)."""
-    from pyspark.sql import Observation
-
-    observation = Observation("extraction_counters")
-    observed = turns.observe(
-        observation,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.when(F.col("text").isNull(), 1).otherwise(0)).alias("null_texts"),
-    )
-    return observed, observation

@@ -9,7 +9,7 @@ column expressions, so the corpus is reproducible at any scale with no
 RNG and no Python. ``extract_main_content`` lifts the pure block
 classifier (kernel/web.py) into one Arrow-batched pandas UDF — same
 shuffle-free per-turn shape as the material-extraction stage.
-``extract_materials_from_html`` chains strip -> material extraction; on
+``extract_materials_from_html`` strips inside the material-extraction UDF; on
 the synthetic corpus the recovered main text equals the original turn
 text exactly, so its output is row-identical to the direct pipeline — the
 per-turn equality invariant, proven by a frozen-golden oracle shared with
@@ -23,6 +23,9 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kernel.web import main_content
+from .extraction import _extract, _ordered
 
 MAIN_CONTENT_TYPE = ("main_text string, n_blocks int, kept_blocks int, "
                      "dropped_chars int")
@@ -144,33 +147,20 @@ def wrap_docs_in_adversarial_html(docs: DataFrame) -> DataFrame:
         expr.alias("text"))
 
 
-def extract_main_content(
-        turns: DataFrame,
-        min_chars: int = None,
-        max_link_density: float = None) -> DataFrame:
+def extract_main_content(turns: DataFrame) -> DataFrame:
     """Append a ``main`` struct: boilerplate-stripped text + block stats.
 
     One Arrow-batched pandas UDF over the narrow text column; per-turn
     rows are independent, so the stage is shuffle-free and scales like
-    the material-extraction UDF. Threshold defaults come from the kernel
-    (the single source of truth for the keep rule).
+    the material-extraction UDF. The keep rule and its thresholds live in
+    the kernel (kernel/web.py).
     """
-    from ..kernel.web import MAX_LINK_DENSITY, MIN_BLOCK_CHARS
-
-    if min_chars is None:
-        min_chars = MIN_BLOCK_CHARS
-    if max_link_density is None:
-        max_link_density = MAX_LINK_DENSITY
-
     @F.pandas_udf(f"struct<{MAIN_CONTENT_TYPE}>")
     def main_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from ..kernel.web import main_content
-
         for series in batches:
             rows = []
             for html in series:
-                out = main_content(html, min_chars=min_chars,
-                                   max_link_density=max_link_density)
+                out = main_content(html)
                 rows.append({
                     "main_text": out["text"],
                     "n_blocks": out["n_blocks"],
@@ -189,85 +179,20 @@ def extract_main_content(
     )
 
 
+def _main_text(html: str) -> str:
+    return main_content(html)["text"]
+
+
 def extract_materials_from_html(turns_html: DataFrame,
-                                patterns=None,
-                                fused: bool = True) -> DataFrame:
+                                patterns=None) -> DataFrame:
     """Full web path: strip boilerplate, then run the material-extraction
     kernel on the recovered main text. Output schema matches
     ``extract_ordered`` (conv_id, turn_idx, turn_rank, tokens, spans,
     materials) so every downstream consumer is interchangeable.
 
-    ``fused=True`` (default) runs strip + extraction inside ONE
-    Arrow-batched UDF — each turn's text crosses the JVM/Python boundary
-    once instead of twice (strip out, text back in, extraction out),
-    which matters because Arrow serialization is the dominant fixed cost
-    of the hot path. ``fused=False`` keeps the two stages composable
-    (e.g. to materialize stripped text for other consumers); both
-    variants are row-identical (parity-tested, and the registered query
-    hash-matches the direct pipeline's golden either way)."""
-    from .extraction import extract_ordered
-
-    if not fused:
-        stripped = (
-            extract_main_content(turns_html)
-            .select(
-                "conv_id", "turn_idx",
-                F.col("main.main_text").alias("text"),
-            )
-        )
-        return extract_ordered(stripped, patterns=patterns,
-                               include_tokens=False)
-
-    from pyspark.sql import types as T
-
-    from .extraction import load_full_patterns
-    from .schemas import EXTRACTION_TYPE
-
-    spark = turns_html.sparkSession
-    pattern_list = patterns if patterns is not None else load_full_patterns()
-    broadcast_patterns = spark.sparkContext.broadcast(pattern_list)
-    # the stripped text itself never crosses back to the JVM — only its
-    # length (for the empty-row filter) and the extraction payload do;
-    # shipping the full main text just to length-test it would re-add
-    # the Arrow payload the fusion exists to eliminate
-    out_type = T.StructType([
-        T.StructField("n_chars", T.IntegerType()),
-        T.StructField("extraction", EXTRACTION_TYPE),
-    ])
-
-    @F.pandas_udf(out_type)
-    def fused_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from ..kernel.gazetteer import TokenTrieMatcher as _Matcher
-        from ..kernel.turns import extract_turn as _extract
-        from ..kernel.web import main_content as _main
-
-        matcher = _Matcher(broadcast_patterns.value)
-        for series in batches:
-            rows = []
-            for html in series:
-                text = _main(html)["text"]
-                rows.append({
-                    "n_chars": len(text),
-                    "extraction": _extract(text, matcher,
-                                           include_tokens=False),
-                })
-            yield pd.DataFrame(rows, columns=["n_chars", "extraction"])
-
-    fused_udf = fused_udf.asNondeterministic()
-    # mirror extract_ordered's contract exactly: empty main text is
-    # filtered out (the unfused path's where-clause), dense turn_idx
-    # yields turn_rank as a column expression — still zero shuffles
-    return (
-        turns_html
-        .select("conv_id", "turn_idx", "text")
-        .where(F.col("text").isNotNull() & (F.length("text") > 0))
-        .withColumn("out", fused_udf(F.col("text")))
-        .where(F.col("out.n_chars") > 0)
-        .select(
-            "conv_id", "turn_idx",
-            (F.col("turn_idx") + F.lit(1)).cast("int").alias("turn_rank"),
-            F.col("out.extraction.tokens").alias("tokens"),
-            F.col("out.extraction.spans").alias("spans"),
-            F.col("out.extraction.materials").alias("materials"),
-        )
-    )
+    Strip and extraction run inside the ONE extraction UDF — each turn's
+    text crosses the JVM/Python boundary once, and the stripped text
+    never crosses back. A page with no main text yields no row."""
+    narrow = turns_html.select("conv_id", "turn_idx", "text")
+    return _ordered(_extract(narrow, patterns, include_tokens=False,
+                             text_of=_main_text))

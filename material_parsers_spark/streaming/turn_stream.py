@@ -16,6 +16,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..pipeline.extraction import run_extraction
 from ..pipeline.schemas import TURNS_SCHEMA
 
 
@@ -27,24 +28,6 @@ def read_turn_stream(spark: SparkSession, input_dir: str,
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-
-
-def streaming_extraction(turns: DataFrame,
-                         patterns: Optional[list] = None) -> DataFrame:
-    """Same extraction UDF as the batch path, applied to a stream."""
-    from ..pipeline.extraction import run_extraction
-    return run_extraction(turns, patterns=patterns)
-
-
-def streaming_web_extraction(turns_html: DataFrame,
-                             patterns: Optional[list] = None) -> DataFrame:
-    """The web flagship on a stream: fused HTML-strip + extraction
-    (pipeline/web.py) over continuously arriving HTML turns — pandas
-    UDFs are streaming-safe, so the exact batch operator runs unchanged
-    under a streaming plan (same output schema as
-    ``extract_materials_from_html``)."""
-    from ..pipeline.web import extract_materials_from_html
-    return extract_materials_from_html(turns_html, patterns=patterns)
 
 
 def windowed_span_counts(extracted: DataFrame,
@@ -73,8 +56,7 @@ def run_stream_once(spark: SparkSession, input_dir: str, output_dir: str,
                     patterns: Optional[list] = None) -> None:
     """Drain all available input once (availableNow) into a parquet sink —
     the batch-incremental deployment mode (cron-driven micro-batch)."""
-    extracted = streaming_extraction(
-        read_turn_stream(spark, input_dir), patterns)
+    extracted = run_extraction(read_turn_stream(spark, input_dir), patterns)
     flat = extracted.select(
         "conv_id", "turn_idx", "ts",
         F.col("extraction.spans").alias("spans"),

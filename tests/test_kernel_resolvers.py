@@ -292,3 +292,24 @@ def test_calculate_distances_goldens_2():
     assert len(distances) == 2
     assert distances[materials[0]][tcs[0]] == 27.0
     assert distances[materials[1]][tcs[0]] == 23.5
+
+
+def test_respectively_sentences_with_one_empty_side_do_not_raise():
+    """Two "respectively" sentences whose segments leave one side of the
+    positional pairing empty produce no pairing instead of an
+    IndexError; the production dictionary is needed to reach that
+    case."""
+    from material_parsers_spark.kernel.gazetteer import TokenTrieMatcher
+    from material_parsers_spark.kernel.turns import extract_turn
+    from material_parsers_spark.pipeline.extraction import load_full_patterns
+
+    text = (
+        "Diffraction confirms a MgAl2O4-type arrangement with pm-3m "
+        "symmetry in this batch. The AlB2-type structure with P6/mmm "
+        "symmetry was confirmed for CuFrO2 at 111 K. In the best cases "
+        "135 K and 2339 K were measured for MgB 2 and NbB 2 , "
+        "respectively. In the best cases 59 K and 2932 K were measured "
+        "for MgB 2 and NbB 2 , respectively."
+    )
+    out = extract_turn(text, TokenTrieMatcher(load_full_patterns()))
+    assert any(span["type"] == "<tcValue>" for span in out["spans"])

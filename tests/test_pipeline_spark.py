@@ -12,7 +12,7 @@ from material_parsers_spark.kernel.turns import extract_turn
 from material_parsers_spark.pipeline.checkpoint import run_with_checkpoint
 from material_parsers_spark.pipeline.extraction import (
     build_default_patterns,
-    ordered_output,
+    extract_ordered,
     run_extraction,
     span_counts_per_conversation,
 )
@@ -91,8 +91,7 @@ def test_replay_conversations_are_byte_exact(spark):
 def test_pipeline_matches_pure_kernel_per_turn(spark, turns):
     """The north-rule invariant: per-turn extraction equality under stable
     (conv_id, turn_idx) ordering — Spark vs driver-side kernel."""
-    result = ordered_output(run_extraction(turns)) \
-        .orderBy("conv_id", "turn_idx").collect()
+    result = extract_ordered(turns).orderBy("conv_id", "turn_idx").collect()
 
     raw = turns.orderBy("conv_id", "turn_idx").collect()
     from material_parsers_spark.pipeline.extraction import load_full_patterns
@@ -114,7 +113,7 @@ def test_pipeline_matches_pure_kernel_per_turn(spark, turns):
 
 
 def test_turn_rank_follows_turn_idx(spark, turns):
-    out = ordered_output(run_extraction(turns))
+    out = extract_ordered(turns)
     from pyspark.sql import functions as F
     bad = out.where(F.col("turn_rank") != F.col("turn_idx") + 1).count()
     assert bad == 0
@@ -348,24 +347,6 @@ def test_checkpoint_resume_with_reused_run_id_counts_only_new_work(spark, turns)
             == N_TURNS
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_deduped_extraction_matches_direct_path(spark, turns):
-    """Cross-row CSE (extract once per distinct text + join back) must
-    produce row-identical output to the direct zero-shuffle path."""
-    import json as _json
-
-    from material_parsers_spark.pipeline.extraction import (
-        extract_ordered,
-        extract_ordered_deduped,
-    )
-
-    direct = extract_ordered(turns, include_tokens=False)
-    deduped = extract_ordered_deduped(turns, include_tokens=False)
-    key = lambda r: (r["conv_id"], r["turn_idx"])
-    a = sorted((r.asDict(recursive=True) for r in direct.collect()), key=key)
-    b = sorted((r.asDict(recursive=True) for r in deduped.collect()), key=key)
-    assert _json.loads(_json.dumps(a)) == _json.loads(_json.dumps(b))
 
 
 def test_conversation_documents_are_ordered(spark):

@@ -54,14 +54,14 @@ def more_prefix():
 
 
 def test_windowed_counts_schema(spark):
+    from material_parsers_spark.pipeline.extraction import run_extraction
     from material_parsers_spark.streaming.turn_stream import (
-        streaming_extraction,
         windowed_span_counts,
     )
     # windowed agg plan compiles against the streaming schema (batch DF with
     # identical schema exercises the same analyzer path)
     turns = generate_turns(spark, 50, partitions=1)
-    out = windowed_span_counts(streaming_extraction(turns))
+    out = windowed_span_counts(run_extraction(turns))
     rows = out.collect()
     assert sum(r.n_turns for r in rows) == 50
     assert all(r.window_start is not None for r in rows)
@@ -121,7 +121,7 @@ def test_stateful_conversation_counters_accumulate(spark, tmp_path):
 
 
 def test_streaming_web_extraction_drain_matches_batch(spark):
-    """The fused HTML-strip + extraction operator runs unchanged under a
+    """The HTML-strip + extraction operator runs unchanged under a
     streaming plan: an availableNow drain over HTML turns produces the
     same rows as the batch web path."""
     import json as _json
@@ -132,7 +132,6 @@ def test_streaming_web_extraction_drain_matches_batch(spark):
     )
     from material_parsers_spark.streaming.turn_stream import (
         read_turn_stream,
-        streaming_web_extraction,
     )
 
     workdir = tempfile.mkdtemp(prefix="stream-web-")
@@ -140,7 +139,7 @@ def test_streaming_web_extraction_drain_matches_batch(spark):
         turns = wrap_turns_in_html(generate_turns(spark, 120, partitions=3))
         turns.write.mode("overwrite").parquet(f"{workdir}/in")
 
-        stream = streaming_web_extraction(
+        stream = extract_materials_from_html(
             read_turn_stream(spark, f"{workdir}/in"))
         assert stream.isStreaming
         query = (stream.writeStream.format("parquet")

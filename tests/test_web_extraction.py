@@ -211,18 +211,6 @@ class TestScannerFidelity:
         assert html_blocks(page) == html_blocks_reference(page)
 
 
-def test_fused_and_staged_web_paths_are_row_identical(spark, turns):
-    import json as _json
-
-    wrapped = wrap_turns_in_html(turns)
-    fused = extract_materials_from_html(wrapped, fused=True)
-    staged = extract_materials_from_html(wrapped, fused=False)
-    key = lambda r: (r["conv_id"], r["turn_idx"])
-    a = sorted((r.asDict(recursive=True) for r in fused.collect()), key=key)
-    b = sorted((r.asDict(recursive=True) for r in staged.collect()), key=key)
-    assert _json.loads(_json.dumps(a)) == _json.loads(_json.dumps(b))
-
-
 def test_fast_scanner_fuzz_differential_structured_markup():
     """Property pin of the fidelity boundary: on structured tag soup
     (valid and common-malformed constructs, balanced quotes) the fast
