@@ -8,7 +8,7 @@ rollup.
 
 Plan shape (verified via .explain): parquet scan with pushed filters and a
 two-column ReadSchema -> WholeStageCodegen filter -> ArrowEvalPython ->
-project. No groupBy, no join, no window in the hot path.
+filter + project. No groupBy, no join, no window in the hot path.
 """
 
 from __future__ import annotations

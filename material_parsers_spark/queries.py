@@ -5242,6 +5242,7 @@ _KM_INIT_LO = 200     # init centroids = data vectors 200..207
 _KM_DIM = 64
 _KM_SCALE = 1_000_000
 
+
 # fixed-point quantization: float embeddings -> micro-unit bigints.
 # float32 x 1e6 is EXACT in double (24-bit x 14-bit mantissas < 53),
 # so the quantized values are identical on both engines, and every
@@ -5250,8 +5251,6 @@ _KM_SCALE = 1_000_000
 # engines AND across shuffle reduction orders, which is what makes the
 # iterative job resumable/verifiable at cluster scale where float
 # summation order is nondeterministic.
-
-
 def _km_quant_np(mat):
     """Fixed-point quantization: HALF_UP round of x·1e6 (x float32),
     cast to int64. floor(y + 0.5) / ceil(y - 0.5) equals
@@ -5346,8 +5345,9 @@ def kmeans_assign(emb: DataFrame, k: int = _KM_K,
     """Distributed Lloyd k-means over the embedding column with a
     deterministic init (data vectors {_KM_INIT_LO}..) and a FIXED
     iteration count, entirely in fixed-point int64 (each coordinate is
-    HALF_UP of x·1e6, cast to int64). Returns (vec_id, cluster, dist_sq) under the
-    final centroids; dist_sq is squared euclidean in micro-unit^2.
+    HALF_UP of x·1e6, cast to int64). Returns (vec_id, cluster, dist_sq)
+    under the final centroids; dist_sq is squared euclidean in
+    micro-unit^2.
 
     Scale shape (100 TB verdict): the classic Spark k-means loop —
     per iteration, assignment is a shuffle-free whole-stage-codegen

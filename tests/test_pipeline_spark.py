@@ -182,7 +182,6 @@ def test_extraction_plans_have_one_python_node_and_no_exchange(
     stage."""
     from pyspark.sql import functions as F
 
-    from material_parsers_spark.pipeline.extraction import extract_ordered
     from material_parsers_spark.pipeline.web import (
         extract_materials_from_html,
         wrap_turns_in_html,

@@ -56,8 +56,7 @@ def more_prefix():
 def test_windowed_counts_schema(spark):
     from material_parsers_spark.pipeline.extraction import run_extraction
     from material_parsers_spark.streaming.turn_stream import (
-        windowed_span_counts,
-    )
+        windowed_span_counts)
     # windowed agg plan compiles against the streaming schema (batch DF with
     # identical schema exercises the same analyzer path)
     turns = generate_turns(spark, 50, partitions=1)
@@ -130,9 +129,7 @@ def test_streaming_web_extraction_drain_matches_batch(spark):
         extract_materials_from_html,
         wrap_turns_in_html,
     )
-    from material_parsers_spark.streaming.turn_stream import (
-        read_turn_stream,
-    )
+    from material_parsers_spark.streaming.turn_stream import read_turn_stream
 
     workdir = tempfile.mkdtemp(prefix="stream-web-")
     try:
