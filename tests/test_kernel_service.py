@@ -1,6 +1,8 @@
 """Service-facade tests: endpoint semantics end-to-end (the reference's
 HTTP surface, list-in/list-out)."""
 
+import random
+
 from material_parsers_spark.kernel import service
 from tests.fixture_utils import get_tokens_and_spans
 
@@ -81,3 +83,51 @@ def test_link_type_configs_match_reference_orientations():
     }
     ours = {(src, dst) for src, dst, _forced in service.LINK_TYPE_CONFIGS}
     assert ours == reference
+
+
+def _template_turns(n_turns, seed=7):
+    """Multi-sentence turns joined from the corpus generator's sentence
+    templates, each slot filled from the generator's value lists."""
+    from material_parsers_spark.pipeline import transcripts as tr
+
+    rng = random.Random(seed)
+    values = {"F": tr.FORMULAS, "V": [str(v) for v in range(3, 93)],
+              "D": [str(d) for d in range(9)],
+              "C": tr.CRYSTAL_STRUCTURES, "G": tr.SPACE_GROUPS}
+    turns = []
+    for _ in range(n_turns):
+        sentences = []
+        for _ in range(rng.randint(1, 6)):
+            tid = rng.randrange(len(tr.TEMPLATES))
+            a, b = (rng.choice(values[kind])
+                    for kind in tr.TEMPLATE_SLOTS[tid])
+            sentences.append(tr.TEMPLATES[tid] % (a, b))
+        turns.append(" ".join(sentences))
+    return turns
+
+
+def test_process_link_links_like_extract_turn():
+    """`/process/link` over extract_turn's own tokens and spans, with
+    <formula>/<name> playing <material> and links and linkable cleared,
+    gives every span the links and linkable that extract_turn gave it."""
+    from material_parsers_spark.kernel.gazetteer import TokenTrieMatcher
+    from material_parsers_spark.kernel.turns import extract_turn
+    from material_parsers_spark.pipeline.extraction import load_full_patterns
+
+    matcher = TokenTrieMatcher(load_full_patterns())
+    n_links = 0
+    for text in _template_turns(300):
+        turn = extract_turn(text, matcher)
+        spans = [dict(s, links=[], linkable=False,
+                      type=("<material>"
+                            if s["type"] in ("<formula>", "<name>")
+                            else s["type"]))
+                 for s in turn["spans"]]
+        out = service.process_link(
+            [{"text": text, "tokens": turn["tokens"], "spans": spans}])
+        assert ({s["id"]: (s["links"], s["linkable"])
+                 for s in out[0]["spans"]}
+                == {s["id"]: (s["links"], s["linkable"])
+                    for s in turn["spans"]}), text
+        n_links += sum(len(s["links"]) for s in turn["spans"])
+    assert n_links > 1000
