@@ -116,11 +116,15 @@ def calculate_distances(materials: List[MergedToken],
                 if CLOSING_PARENTHESIS[OPENING_PARENTHESIS.index(o)] in closed
             ]
 
-            if matched:
-                starting = [t for t in doc[previous_index + 1: tc_value.i]
-                            if str(t) in OPENING_PARENTHESIS][0]
-                ending = [t for t in doc[tc_value.i + 1: following_index]
-                          if str(t) in CLOSING_PARENTHESIS][-1]
+            # a parenthesis inside a merged entity token is no standalone
+            # token: without one on each side, measure unparenthesized
+            openings = [t for t in doc[previous_index + 1: tc_value.i]
+                        if str(t) in OPENING_PARENTHESIS] if matched else []
+            closings = [t for t in doc[tc_value.i + 1: following_index]
+                        if str(t) in CLOSING_PARENTHESIS] if matched else []
+
+            if openings and closings:
+                starting, ending = openings[0], closings[-1]
                 wrapped_len = len(doc.slice_text(starting.i, ending.i))
                 tc_distances[tc_value] = abs(
                     pivot_centroid - starting.idx + wrapped_len / 2

@@ -313,3 +313,25 @@ def test_respectively_sentences_with_one_empty_side_do_not_raise():
     )
     out = extract_turn(text, TokenTrieMatcher(load_full_patterns()))
     assert any(span["type"] == "<tcValue>" for span in out["spans"])
+
+
+def test_parenthesis_inside_a_merged_material_does_not_raise():
+    """A ")" seen after a tcValue that sits inside a merged material
+    token is no standalone closing parenthesis; the distance falls back
+    to the unparenthesized centroid distance instead of an IndexError."""
+    from material_parsers_spark.kernel.gazetteer import TokenTrieMatcher
+    from material_parsers_spark.kernel.turns import extract_turn
+    from material_parsers_spark.pipeline.extraction import load_full_patterns
+
+    text = (
+        "The resistivity measurement shows T c = 59 K for the "
+        "(Mo 0.96 Zr 0.04 ) 0.85 B 2 sample. The resistivity measurement "
+        "shows T c = 7 K for the MgB 2 sample. Values 48K higher than 77K "
+        "are rejected here for (Mo 0.96 Zr 0.04 ) 0.85 B 2. T c = 31.2 K "
+        "was found for (Mo 0.96 Zr 0.04 ) 0.85 B 2 at 140 GPa."
+    )
+    out = extract_turn(text, TokenTrieMatcher(load_full_patterns()))
+    tc_links = [link for span in out["spans"] for link in span["links"]
+                if span["type"] == "<tcValue>"
+                and link["targetType"] == "<material>"]
+    assert len(tc_links) == 3
