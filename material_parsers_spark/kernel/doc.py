@@ -17,13 +17,6 @@ from dataclasses import dataclass, field, replace
 from functools import lru_cache
 from typing import List, Optional, Tuple
 
-ENTITY_CLASSES = [
-    "<material>", "<class>", "<temperature>", "<tc>",
-    "<tcValue>", "<tcvalue>", "<pressure>", "<me_method>",
-    "<material-tc>", "<temperature-tc>", "<crystal-structure>",
-    "<space-groups>",
-]
-
 
 @dataclass(slots=True)
 class MergedToken:
@@ -113,25 +106,6 @@ def compute_span_id(text: str, type_: str, offset_start, offset_end,
         [text, type_, offset_start, offset_end, token_start, token_end, source]
     )
     return str(int(hashlib.sha1(payload.encode("utf-8")).hexdigest()[:15], 16))
-
-
-def span_to_dict(token: MergedToken) -> dict:
-    """Project a merged entity token back to the span dict shape
-    (`data_model.py:1-16`, including its token_end = i + char-length quirk
-    when applied to merged tokens)."""
-    return {
-        "text": token.text,
-        "formattedText": token.formatted_text,
-        "type": token.ent_type,
-        "offset_start": token.idx,
-        "offset_end": token.idx + len(token.text),
-        "token_start": token.i,
-        "token_end": token.i + len(token),
-        "id": token.id,
-        "boundingBoxes": token.bounding_boxes,
-        "links": token.links,
-        "linkable": token.linkable,
-    }
 
 
 def build_doc(words: List[str], spaces: List[bool], spans: List[dict]) -> MergedDoc:

@@ -1,17 +1,11 @@
-"""Rule-based entity linker orchestration (J8-J9, SURVEY.md §2.7).
+"""Link-type names (J9, SURVEY.md §2.7).
 
-Re-expresses `linking/linking_module.py:300-429`: remap tokens, partition
-spans into source/destination types, run simple then vicinity resolution,
-project spans back to dicts, and merge links by span id.
+Re-expresses `linking/linking_module.py:317-331`: the canonical type of a
+link from its unordered (source, destination) span-type pair. The link
+stage itself is `turns.link_paragraph`.
 """
 
 from __future__ import annotations
-
-import copy
-from typing import List
-
-from .doc import ENTITY_CLASSES, build_doc, convert_tokens, span_to_dict
-from .resolvers import simple_resolution, vicinity_resolution
 
 MATERIAL_TC_TYPE = "<material-tcValue>"
 TC_PRESSURE_TYPE = "<tcValue-pressure>"
@@ -36,85 +30,3 @@ def get_link_type(type1: str, type2: str) -> str:
         raise ValueError(f"The provided types are invalid. {type1}, {type2}")
     return link_type
 
-
-def collect_relationships(relationships: List[tuple], type_: str) -> List[dict]:
-    return [
-        {"type": type_, "left": span_to_dict(left), "right": span_to_dict(right)}
-        for left, right in relationships
-    ]
-
-
-class RuleBasedLinker:
-    """One (source, destination) type configuration, e.g. <tcValue> ->
-    <material>. Stateless and picklable — safe inside UDF closures."""
-
-    def __init__(self, source: str = "<tcValue>", destination: str = "<material>"):
-        self.source = source
-        self.destination = destination
-
-    def process_sentence(self, words: List[str], spaces: List[bool],
-                         spans: List[dict]) -> dict:
-        text = "".join(
-            words[i] + (" " if spaces[i] else "") for i in range(len(words))
-        )
-        doc = build_doc(words, spaces, spans)
-
-        destination_entities = [
-            t for t in doc
-            if t.ent_type == self.destination and t.linkable is True
-        ]
-        source_entities = [
-            t for t in doc
-            if t.ent_type == self.source and t.linkable is True
-        ]
-
-        extracted = {"relationships": []}
-
-        relationships = simple_resolution(destination_entities, source_entities)
-        if relationships:
-            extracted["relationships"].extend(
-                collect_relationships(relationships, "simple"))
-        else:
-            relationships = vicinity_resolution(
-                doc, destination_entities, source_entities)
-            if relationships:
-                extracted["relationships"].extend(
-                    collect_relationships(relationships, "vicinity"))
-
-        extracted["spans"] = [
-            span_to_dict(t) for t in doc if t.ent_type in ENTITY_CLASSES
-        ]
-        extracted["text"] = text
-        return extracted
-
-    def process(self, text: str, spans: List[dict], tokens: List[dict]) -> List[dict]:
-        """J8 orchestration (`linking_module.py:333-361`): skip the expensive
-        path when either side is empty (the short-circuit the Spark layer
-        also applies as a cheap filter before the UDF)."""
-        words, spaces, spans_remapped = convert_tokens(tokens, spans)
-
-        output: List[dict] = []
-        destination = [s for s in spans_remapped if s["type"] == self.destination]
-        source = [s for s in spans_remapped if s["type"] == self.source]
-
-        if destination and source:
-            result = self.process_sentence(words, spaces, spans_remapped)
-            if result:
-                output.append(result)
-        else:
-            output.append({
-                "spans": [s for s in spans_remapped
-                          if s["type"] in ENTITY_CLASSES],
-                "text": "".join(
-                    words[i] + (" " if spaces[i] else "")
-                    for i in range(len(words))
-                ),
-            })
-        return output
-
-    def process_paragraph(self, paragraph: dict) -> List[dict]:
-        return self.process(
-            copy.deepcopy(paragraph["text"]),
-            copy.deepcopy(paragraph["spans"]),
-            copy.deepcopy(paragraph["tokens"]),
-        )

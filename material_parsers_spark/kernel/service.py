@@ -2,7 +2,8 @@
 `service.py:102-342`): same endpoints, list-in/list-out instead of HTTP.
 
 These are the functions a user of the reference service would call; the
-Spark pipeline wraps the same kernels for table-scale runs.
+Spark pipeline wraps the same kernels for table-scale runs, and
+`process_link` runs the link stage of `turns.extract_turn`.
 """
 
 from __future__ import annotations
@@ -15,18 +16,10 @@ from .formulas import formula_to_composition as _compose
 from .formulas import name_to_formula as _name_to_formula
 from .gazetteer import TokenTrieMatcher, match_structures
 from .labels import cluster_by_label
-from .linker import RuleBasedLinker, get_link_type
+from .linker import get_link_type
 from .materials import extract_results, strip_empty
-from .tc_classifier import mark_temperatures_paragraph
 from .tokenizer import tokenize
-from .turns import LINK_CONFIGS, extract_turn
-
-# (source, destination, forced-linkable types) pinned to the reference's
-# linker wiring (`service.py:18-31`) and label_link map (`service.py:41-47`):
-# note tcValue-pressure runs pressure->tcValue, unlike the other tcValue
-# linkers — vicinity resolution is direction-sensitive, so orientation
-# matters on multi-entity sentences. Shared with the Spark hot path.
-LINK_TYPE_CONFIGS = LINK_CONFIGS
+from .turns import extract_turn, link_paragraph
 
 
 def process_material(texts: List[str],
@@ -54,39 +47,12 @@ def process_tagged_material(tagged: List[list]) -> List[list]:
 
 def process_link(paragraphs: List[dict]) -> List[dict]:
     """`POST /process/link` (`service.py:102-122,151-211`): mark linkable
-    temperatures, then run every link-type configuration and merge non-crf
-    links back onto the input spans by id."""
-    output = []
-    for paragraph in paragraphs:
-        marked = mark_temperatures_paragraph(paragraph)
-        linkable = {str(s["id"]): s["linkable"] for s in marked["spans"]}
-        for span in paragraph["spans"]:
-            if str(span["id"]) in linkable:
-                span["linkable"] = linkable[str(span["id"])]
-
-        for source, destination, forced_types in LINK_TYPE_CONFIGS:
-            work = [dict(s, links=list(s.get("links") or []))
-                    for s in paragraph["spans"]]
-            for span in work:
-                if span["type"] in forced_types:
-                    span["linkable"] = True
-            linker = RuleBasedLinker(source=source, destination=destination)
-            results = linker.process(
-                paragraph["text"], work,
-                [dict(t) for t in paragraph["tokens"]])
-            for result in results:
-                for out_span in result.get("spans", []):
-                    links = [l for l in out_span.get("links") or []
-                             if l.get("type") != "crf"]
-                    if not links:
-                        continue
-                    for span in paragraph["spans"]:
-                        if str(span["id"]) == str(out_span["id"]):
-                            span.setdefault("links", [])
-                            for link in links:
-                                if link not in span["links"]:
-                                    span["links"].append(link)
-        output.append(paragraph)
+    temperatures, then run every link-type configuration and append the
+    new links to the input spans by id — the link stage of
+    ``extract_turn``."""
+    output = list(paragraphs)
+    for paragraph in output:
+        link_paragraph(paragraph["tokens"], paragraph["spans"])
     return output
 
 

@@ -1,6 +1,6 @@
-"""Critical-temperature linkability classifier (C1-C2, SURVEY.md §2.8).
+"""Critical-temperature linkability classifier (C1, SURVEY.md §2.8).
 
-Re-expresses `linking/linking_module.py:432-565` over the merged-token doc:
+Re-expresses `linking/linking_module.py:432-539` over the merged-token doc:
 a cascade of token-window rules marking <tcValue> spans linkable. All rules
 are token-index arithmetic and exact text-window compares; fixtures at
 `tests/test_linking_module.py:57-297`.
@@ -8,9 +8,7 @@ are token-index arithmetic and exact text-window compares; fixtures at
 
 from __future__ import annotations
 
-from typing import List
-
-from .doc import ENTITY_CLASSES, MergedDoc, build_doc, convert_tokens, span_to_dict
+from .doc import MergedDoc
 
 TEMP_TYPES = ["temperature", "tcvalue", "tcValue",
               "<temperature>", "<tcvalue>", "<tcValue>"]
@@ -116,22 +114,3 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
         temp.linkable = True
     return doc
 
-
-def mark_temperatures(text: str, tokens: List[dict], spans: List[dict]) -> dict:
-    """C2: convert -> build doc -> classify -> project spans
-    (`linking_module.py:541-554`)."""
-    words, spaces, spans_remapped = convert_tokens(tokens, spans)
-    doc = build_doc(words, spaces, spans_remapped)
-    doc = mark_linkable_temperatures(doc)
-
-    converted = [span_to_dict(t) for t in doc if t.ent_type in ENTITY_CLASSES]
-    return {"spans": converted, "text": text}
-
-
-def mark_temperatures_paragraph(paragraph: dict) -> dict:
-    import copy
-    return mark_temperatures(
-        copy.deepcopy(paragraph["text"]),
-        copy.deepcopy(paragraph["tokens"]),
-        copy.deepcopy(paragraph["spans"]),
-    )

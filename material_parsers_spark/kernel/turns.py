@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from typing import List, Optional
 
-from .doc import build_doc, compute_span_id, convert_tokens, span_to_dict
+from .doc import build_doc, compute_span_id, convert_tokens
 from .formulas import formula_to_composition, name_to_formula
 from .gazetteer import TokenTrieMatcher
 from .materials import extract_results
@@ -35,6 +35,11 @@ LINK_CONFIGS = [
     ("<material>", "<crystal-structure>", ("<material>", "<crystal-structure>")),
     ("<material>", "<space-groups>", ("<material>", "<space-groups>")),
 ]
+
+# extract_turn links <formula>/<name> spans in the <material> role; the
+# configs without <material> touch neither type, so applying the role once
+# gives the links applying it per config would
+_MATERIAL_ROLE = {"<formula>": "<material>", "<name>": "<material>"}
 
 # span types whose surface text feeds the material state machine
 MATERIAL_LABELS = {"<formula>", "<name>", "<doping>", "<shape>",
@@ -91,7 +96,6 @@ def extract_turn(text: Optional[str],
         span["id"] = compute_span_id(
             span["text"], span["type"], span["offset_start"],
             span["offset_end"], span["token_start"], span["token_end"])
-        span["links"] = []
 
     # ---- material records (SURVEY §3.1): clusters -> state machine
     clusters = [
@@ -106,68 +110,12 @@ def extract_turn(text: Optional[str],
     if isinstance(materials, dict):  # empty-example sentinel
         materials = []
 
-    # ---- linking (SURVEY §3.2): classify tcValues, then link per config.
-    # Tokens are converted, spans remapped, and ONE merged-token doc built;
-    # the reference deep-copies and rebuilds its spaCy doc per stage.
-    token_dicts = [
-        {"text": tokens[i], "offset_start": offsets[i][0],
-         "offset_end": offsets[i][1], "token_start": i, "token_end": i + 1}
-        for i in range(len(tokens))
-    ]
-
-    words, spaces, remapped = convert_tokens(
-        token_dicts, [{**s, "links": list(s["links"])} for s in spans])
-
-    doc = build_doc(words, spaces, remapped)
-    doc = mark_linkable_temperatures(doc)
-    linkable_by_id = {t.id: t.linkable for t in doc if t.ent_type}
-
-    spans_by_id = {}
-    for span in spans:
-        spans_by_id[str(span["id"])] = span
-        if str(span["id"]) in linkable_by_id:
-            span["linkable"] = bool(linkable_by_id[str(span["id"])])
-
-    # one merged-token doc serves every link configuration: the token
-    # boundaries never change between configs, only the entity type alias
-    # (<formula>/<name> play <material>) and the linkable marks do — reset
-    # those per config instead of rebuilding the doc (the reference rebuilds
-    # the spaCy doc per linker; at Arrow-batch scale that dominates).
-    entity_tokens = [t for t in doc if t.ent_type]
-    original_types = [t.ent_type for t in entity_tokens]
-    base_linkable = [t.linkable for t in entity_tokens]
-
-    for source_type, destination_type, forced_types in LINK_CONFIGS:
-        involves_material = "<material>" in (source_type, destination_type)
-        for token, orig_type, orig_linkable in zip(
-                entity_tokens, original_types, base_linkable):
-            effective = orig_type
-            if involves_material and orig_type in ("<formula>", "<name>"):
-                effective = "<material>"
-            token.ent_type = effective
-            token.linkable = orig_linkable or effective in forced_types
-            token.links = []
-
-        destinations = [t for t in entity_tokens
-                        if t.ent_type == destination_type and t.linkable]
-        sources = [t for t in entity_tokens
-                   if t.ent_type == source_type and t.linkable]
-        if not destinations or not sources:
-            continue
-
-        relationships = simple_resolution(destinations, sources)
-        if not relationships:
-            vicinity_resolution(doc, destinations, sources)
-
-        for token in entity_tokens:
-            if not token.links:
-                continue
-            span = spans_by_id.get(str(token.id))
-            if span is None:
-                continue
-            for link in token.links:
-                if link not in span["links"]:
-                    span["links"].append(link)
+    # ---- linking (SURVEY §3.2), on copies that carry the material role
+    token_dicts = [{"text": token} for token in tokens]
+    linked = [dict(s, type=_MATERIAL_ROLE.get(s["type"], s["type"]),
+                   links=[])
+              for s in spans]
+    link_paragraph(token_dicts, linked)
 
     out_tokens = [
         {"text": tokens[i], "start": offsets[i][0], "end": offsets[i][1]}
@@ -182,23 +130,71 @@ def extract_turn(text: Optional[str],
             "offset_end": s["offset_end"],
             "token_start": s["token_start"],
             "token_end": s["token_end"],
-            "linkable": bool(s.get("linkable", False)),
+            "linkable": bool(linked_span.get("linkable", False)),
             "links": [
                 {
-                    "targetId": str(l.get("targetId")),
-                    "targetText": l.get("targetText"),
-                    "targetType": l.get("targetType"),
-                    "type": l.get("type"),
+                    "targetId": str(link.get("targetId")),
+                    "targetText": link.get("targetText"),
+                    "targetType": link.get("targetType"),
+                    "type": link.get("type"),
                 }
-                for l in s["links"]
+                for link in linked_span["links"]
             ],
         }
-        for s in spans
+        for s, linked_span in zip(spans, linked)
     ]
     out_materials = [_material_row(m) for m in materials]
 
     return {"tokens": out_tokens, "spans": out_spans,
             "materials": out_materials}
+
+
+def link_paragraph(tokens: List[dict], spans: List[dict]) -> None:
+    """Classify Tc values, then link spans per ``LINK_CONFIGS``.
+
+    ``spans`` index ``tokens`` by ``token_start``/``token_end``; both are
+    read from copies. Sets ``linkable`` on each span that becomes an
+    entity token and appends each new link to the span's ``links`` once.
+
+    One merged-token doc serves every configuration: the token boundaries
+    never change between configs, only the linkable marks do, so those are
+    reset per config instead of rebuilding the doc (the reference rebuilds
+    its spaCy doc per linker; at Arrow-batch scale that dominates)."""
+    words, spaces, remapped = convert_tokens(
+        tokens, [dict(span) for span in spans])
+    doc = build_doc(words, spaces, remapped)
+    doc = mark_linkable_temperatures(doc)
+
+    entity_tokens = [t for t in doc if t.ent_type]
+    spans_by_id = {str(span["id"]): span for span in spans}
+    for token in entity_tokens:
+        span = spans_by_id.get(str(token.id))
+        if span is not None:
+            span["linkable"] = token.linkable
+    base_linkable = [t.linkable for t in entity_tokens]
+
+    for source_type, destination_type, forced_types in LINK_CONFIGS:
+        for token, linkable in zip(entity_tokens, base_linkable):
+            token.linkable = linkable or token.ent_type in forced_types
+            token.links = []
+
+        destinations = [t for t in entity_tokens
+                        if t.ent_type == destination_type and t.linkable]
+        sources = [t for t in entity_tokens
+                   if t.ent_type == source_type and t.linkable]
+        if not destinations or not sources:
+            continue
+
+        if not simple_resolution(destinations, sources):
+            vicinity_resolution(doc, destinations, sources)
+
+        for token in entity_tokens:
+            if not token.links or str(token.id) not in spans_by_id:
+                continue
+            links = spans_by_id[str(token.id)].setdefault("links", [])
+            for link in token.links:
+                if link not in links:
+                    links.append(link)
 
 
 def _material_row(material: dict) -> dict:

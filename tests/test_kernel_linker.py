@@ -1,4 +1,4 @@
-"""Linker orchestration, sentence-boundary, round-trip, and metrics
+"""Link-type, sentence-boundary, round-trip, and metrics
 fixtures (reference tests/test_linking_module.py:11-33,302-361 and
 tests/test_linking_evaluation.py)."""
 
@@ -11,7 +11,6 @@ from material_parsers_spark.kernel.doc import (
 from material_parsers_spark.kernel.linker import (
     MATERIAL_TC_TYPE,
     TC_PRESSURE_TYPE,
-    RuleBasedLinker,
     get_link_type,
 )
 from material_parsers_spark.kernel.metrics import (
@@ -47,45 +46,6 @@ def test_get_sentence_boundaries_eight_sentences():
     words, spaces, _ = get_tokens(text, [])
     boundaries = get_sentence_boundaries(words, spaces)
     assert len(boundaries) == 8
-
-
-def test_linker_process_paragraph_links_tc_to_material():
-    text = ("The LaFe0.2 Sr 0.4 was discovered to be superconducting at 3K "
-            "applying a pressure of 5Gpa.")
-    tokens, spans = get_tokens_and_spans(
-        text,
-        [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
-         ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
-    )
-    for span in spans:
-        span["linkable"] = True
-
-    linker = RuleBasedLinker(source="<tcValue>", destination="<material>")
-    out = linker.process_paragraph({"text": text, "spans": spans,
-                                    "tokens": tokens})
-    assert len(out) == 1
-    rels = out[0]["relationships"]
-    assert len(rels) == 1
-    assert rels[0]["type"] == "simple"
-    assert rels[0]["left"]["text"] == "LaFe0.2 Sr 0.4"
-    assert rels[0]["right"]["text"] == "3K"
-    # bidirectional links merged onto the spans
-    material_span = next(s for s in out[0]["spans"]
-                         if s["type"] == "<material>")
-    assert material_span["links"][0]["targetText"] == "3K"
-
-
-def test_linker_short_circuits_when_side_empty():
-    text = "The LaFe0.2 Sr 0.4 was discovered."
-    tokens, spans = get_tokens_and_spans(
-        text, [("LaFe0.2 Sr 0.4", "<material>")])
-    linker = RuleBasedLinker(source="<tcValue>", destination="<material>")
-    out = linker.process_paragraph({"text": text, "spans": spans,
-                                    "tokens": tokens})
-    assert len(out) == 1
-    assert "relationships" not in out[0]
-    assert len(out[0]["spans"]) == 1
-    assert out[0]["text"] == text
 
 
 def test_get_link_type_pairs():

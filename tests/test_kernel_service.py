@@ -1,9 +1,11 @@
 """Service-facade tests: endpoint semantics end-to-end (the reference's
 HTTP surface, list-in/list-out)."""
 
+import copy
 import random
 
 from material_parsers_spark.kernel import service
+from material_parsers_spark.kernel.turns import LINK_CONFIGS
 from tests.fixture_utils import get_tokens_and_spans
 
 
@@ -36,22 +38,42 @@ def test_process_tagged_material_matches_reference_fixture():
 def test_process_link_marks_and_links():
     text = ("The LaFe0.2 Sr 0.4 was discovered to be superconducting at 3K "
             "applying a pressure of 5Gpa.")
+    # input linkable on no span, on every span, on the material only
+    for linkable in ((), (0, 1, 2, 3), (0,)):
+        tokens, spans = get_tokens_and_spans(
+            text,
+            [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
+             ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
+        )
+        for index in linkable:
+            spans[index]["linkable"] = True
+        out = service.process_link([
+            {"text": text, "tokens": tokens, "spans": spans}])
+        assert out[0]["text"] == text
+        material, _, tc_value, pressure = out[0]["spans"]
+        # input marks survive; the classifier marks the tcValue
+        assert [s["linkable"] for s in out[0]["spans"]] == [
+            0 in linkable, 1 in linkable, True, 3 in linkable]
+        # one material and one tcValue: a bidirectional "simple" link
+        assert ("3K", "simple") in {
+            (l["targetText"], l["type"]) for l in material["links"]}
+        assert ("LaFe0.2 Sr 0.4", "simple") in {
+            (l["targetText"], l["type"]) for l in tc_value["links"]}
+        # tcValue also linked to the pressure via the tcValue-pressure
+        # config
+        assert any(l["targetText"] == "5Gpa" for l in tc_value["links"])
+        assert any(l["targetText"] == "3K" for l in pressure["links"])
+
+
+def test_process_link_without_both_sides_adds_no_links():
+    text = "The LaFe0.2 Sr 0.4 was discovered."
     tokens, spans = get_tokens_and_spans(
-        text,
-        [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
-         ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
-    )
-    out = service.process_link([
-        {"text": text, "tokens": tokens, "spans": spans}])
-    spans_out = out[0]["spans"]
-    material = next(s for s in spans_out if s["type"] == "<material>")
-    tc_value = next(s for s in spans_out if s["type"] == "<tcValue>")
-    assert tc_value["linkable"] is True
-    assert any(l["targetText"] == "3K" for l in material["links"])
-    assert any(l["targetText"] == "LaFe0.2 Sr 0.4"
-               for l in tc_value["links"])
-    # tcValue also linked to the pressure via the tcValue-pressure config
-    assert any(l["targetText"] == "5Gpa" for l in tc_value["links"])
+        text, [("LaFe0.2 Sr 0.4", "<material>")])
+    paragraph = {"text": text, "tokens": tokens, "spans": spans}
+    before = copy.deepcopy(paragraph)
+    out = service.process_link([paragraph])
+    assert out == [before]
+    assert "links" not in out[0]["spans"][0]
 
 
 def test_convert_endpoints():
@@ -81,7 +103,7 @@ def test_link_type_configs_match_reference_orientations():
         ("<material>", "<crystal-structure>"),
         ("<material>", "<space-groups>"),
     }
-    ours = {(src, dst) for src, dst, _forced in service.LINK_TYPE_CONFIGS}
+    ours = {(src, dst) for src, dst, _forced in LINK_CONFIGS}
     assert ours == reference
 
 
