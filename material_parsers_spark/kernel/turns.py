@@ -152,9 +152,10 @@ def extract_turn(text: Optional[str],
 def link_paragraph(tokens: List[dict], spans: List[dict]) -> None:
     """Classify Tc values, then link spans per ``LINK_CONFIGS``.
 
-    ``spans`` index ``tokens`` by ``token_start``/``token_end``; both are
-    read from copies. Sets ``linkable`` on each span that becomes an
-    entity token and appends each new link to the span's ``links`` once.
+    ``spans`` index ``tokens`` by ``token_start``/``token_end`` and are
+    converted on copies. The only writes to them: ``linkable`` on each span
+    that becomes an entity token, and each new link appended once to the
+    span's ``links``.
 
     One merged-token doc serves every configuration: the token boundaries
     never change between configs, only the linkable marks do, so those are
