@@ -17,6 +17,7 @@ from material_parsers_spark.kernel.metrics import (
     compute_metrics_by_type,
     tokenize_chunk,
 )
+from material_parsers_spark.kernel.service import process_link
 from tests.fixture_utils import get_tokens, get_tokens_and_spans
 
 
@@ -46,6 +47,28 @@ def test_get_sentence_boundaries_eight_sentences():
     words, spaces, _ = get_tokens(text, [])
     boundaries = get_sentence_boundaries(words, spaces)
     assert len(boundaries) == 8
+
+
+def test_linker_process_paragraph_links_tc_to_material():
+    text = ("The LaFe0.2 Sr 0.4 was discovered to be superconducting at 3K "
+            "applying a pressure of 5Gpa.")
+    tokens, spans = get_tokens_and_spans(
+        text,
+        [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
+         ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
+    )
+    for span in spans:
+        span["linkable"] = True
+
+    out = process_link([{"text": text, "spans": spans, "tokens": tokens}])
+    assert len(out) == 1
+    assert out[0]["text"] == text
+    material, _, tc_value, _ = out[0]["spans"]
+    # one material and one tcValue: one bidirectional "simple" link
+    assert [(l["targetText"], l["type"]) for l in material["links"]] == [
+        ("3K", "simple")]
+    assert ("LaFe0.2 Sr 0.4", "simple") in {
+        (l["targetText"], l["type"]) for l in tc_value["links"]}
 
 
 def test_get_link_type_pairs():

@@ -38,31 +38,26 @@ def test_process_tagged_material_matches_reference_fixture():
 def test_process_link_marks_and_links():
     text = ("The LaFe0.2 Sr 0.4 was discovered to be superconducting at 3K "
             "applying a pressure of 5Gpa.")
-    # input linkable on no span, on every span, on the material only
-    for linkable in ((), (0, 1, 2, 3), (0,)):
-        tokens, spans = get_tokens_and_spans(
-            text,
-            [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
-             ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
-        )
-        for index in linkable:
-            spans[index]["linkable"] = True
-        out = service.process_link([
-            {"text": text, "tokens": tokens, "spans": spans}])
-        assert out[0]["text"] == text
-        material, _, tc_value, pressure = out[0]["spans"]
-        # input marks survive; the classifier marks the tcValue
-        assert [s["linkable"] for s in out[0]["spans"]] == [
-            0 in linkable, 1 in linkable, True, 3 in linkable]
-        # one material and one tcValue: a bidirectional "simple" link
-        assert ("3K", "simple") in {
-            (l["targetText"], l["type"]) for l in material["links"]}
-        assert ("LaFe0.2 Sr 0.4", "simple") in {
-            (l["targetText"], l["type"]) for l in tc_value["links"]}
-        # tcValue also linked to the pressure via the tcValue-pressure
-        # config
-        assert any(l["targetText"] == "5Gpa" for l in tc_value["links"])
-        assert any(l["targetText"] == "3K" for l in pressure["links"])
+    tokens, spans = get_tokens_and_spans(
+        text,
+        [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
+         ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
+    )
+    out = service.process_link([
+        {"text": text, "tokens": tokens, "spans": spans}])
+    assert out[0]["text"] == text
+    material, _, tc_value, pressure = out[0]["spans"]
+    # the classifier marks the tcValue only
+    assert [s["linkable"] for s in out[0]["spans"]] == [
+        False, False, True, False]
+    # one material and one tcValue: a bidirectional "simple" link
+    assert ("3K", "simple") in {
+        (l["targetText"], l["type"]) for l in material["links"]}
+    assert ("LaFe0.2 Sr 0.4", "simple") in {
+        (l["targetText"], l["type"]) for l in tc_value["links"]}
+    # tcValue also linked to the pressure via the tcValue-pressure config
+    assert any(l["targetText"] == "5Gpa" for l in tc_value["links"])
+    assert any(l["targetText"] == "3K" for l in pressure["links"])
 
 
 def test_process_link_without_both_sides_adds_no_links():

@@ -1,6 +1,7 @@
 """Tc classifier fixtures, ported verbatim from reference
 tests/test_linking_module.py:57-297."""
 
+from material_parsers_spark.kernel.service import process_link
 from material_parsers_spark.kernel.tc_classifier import (
     mark_linkable_temperatures,
 )
@@ -174,3 +175,19 @@ def test_complex_case_only_first():
     assert len(out) == 1
     assert out[0].text == "2.7 K"
 
+
+def test_mark_temperatures_paragraph_pipeline():
+    text = ("The LaFe0.2 Sr 0.4 was discovered to be superconducting at 3K "
+            "applying a pressure of 5Gpa.")
+    tokens, spans = get_tokens_and_spans(
+        text,
+        [("LaFe0.2 Sr 0.4", "<material>"), ("superconducting", "<tc>"),
+         ("3K", "<tcValue>"), ("5Gpa", "<pressure>")],
+    )
+    spans[0]["linkable"] = True
+    out = process_link([{"text": text, "spans": spans, "tokens": tokens}])[0]
+
+    linkable = [s for s in out["spans"] if s["linkable"] is True]
+    assert len(linkable) == 2
+    assert out["spans"][0]["linkable"] is True
+    assert out["spans"][2]["linkable"] is True
