@@ -4623,44 +4623,44 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", assembled.cast("long").alias("simhash16"))
 
 
-def _dot(a, b):
-    """Left-fold dot product in double — the exact same association order as
-    the DuckDB oracle's list_reduce, so the doubles agree bit-for-bit."""
-    return F.aggregate(
-        F.zip_with(a, b,
-                   lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v)
+def _cosine_col(a, b):
+    """Column twin of _COSINE_SQL: left-fold dot and squared norms in
+    double (the oracle's list_reduce association order, so the doubles
+    agree bit-for-bit), then round(dot / (|a| * |b|), 6). try_divide
+    makes a zero-norm side NULL, as DuckDB's x / 0 is, instead of
+    raising DIVIDE_BY_ZERO; `cosine DESC` ranks it last and
+    `cosine >= tau` drops it."""
+    def fold(arr):
+        return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+    def norm(v):
+        return F.sqrt(fold(F.transform(
+            v, lambda x: x.cast("double") * x.cast("double"))))
+
+    dot = fold(F.zip_with(
+        a, b, lambda x, y: x.cast("double") * y.cast("double")))
+    return F.round(F.try_divide(dot, norm(a) * norm(b)), 6)
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v))
-
-
-def _fold_dot_np(mat, w):
-    """Exact NumPy twin of _dot against a constant vector: accumulating
-    ``acc += mat[:, j] * w[j]`` over the DIMENSION axis applies the
-    identical left-fold double operation sequence per row, so the
-    result is bit-equal to the interpreted zip_with/aggregate
-    expression — vectorization over rows, exactness over dims."""
+def _fold_dot_np(a, b):
+    """Exact NumPy twin of _COSINE_SQL's dot: accumulating
+    ``acc += a[..., j] * b[..., j]`` over the DIMENSION (last) axis
+    applies the identical left-fold double operation sequence per
+    element, so the result is bit-equal to the oracle's list_reduce —
+    vectorization over the leading (broadcast) axes, exactness over
+    dims."""
     import numpy as np
 
-    acc = np.zeros(mat.shape[0])
-    for j in range(mat.shape[1]):
-        acc += mat[:, j] * w[j]
+    acc = np.zeros(np.broadcast_shapes(a.shape[:-1], b.shape[:-1]))
+    for j in range(a.shape[-1]):
+        acc += a[..., j] * b[..., j]
     return acc
 
 
-def _fold_sqnorm_np(mat):
-    """Exact NumPy twin of _norm (before the sqrt): left fold of x*x
-    over the dimension axis."""
-    import numpy as np
-
-    acc = np.zeros(mat.shape[0])
-    for j in range(mat.shape[1]):
-        acc += mat[:, j] * mat[:, j]
-    return acc
+def _fold_sqnorm_np(a):
+    """Exact NumPy twin of _COSINE_SQL's squared norm (before the
+    sqrt): left fold of x*x over the dimension axis."""
+    return _fold_dot_np(a, a)
 
 
 def _round6_half_up_np(x):
@@ -4688,6 +4688,29 @@ def _round6_half_up_np(x):
                 Decimal(repr(float(xf[idx]))).quantize(
                     q, rounding=ROUND_HALF_UP))
     return out
+
+
+def _cosine_np(a, b):
+    """NumPy twin of _COSINE_SQL over float64 arrays whose last axis is
+    the dimension; the leading axes broadcast, e.g. rows (n, 1, d)
+    against pivots (k, d) give (n, k). Left-fold dot and norms
+    (_fold_dot_np), round 6 decimal-HALF_UP (_round6_half_up_np).
+
+    Returns (cos, key). cos is the cosine with the oracle's zero-norm
+    NULL as NaN, which pandas hands Spark as null. key is the value
+    `cosine DESC NULLS LAST` ranks by and `cosine >= tau` tests: NULL
+    is -inf (last, never >= tau) and a NaN component's cosine is +inf
+    (Spark and DuckDB order NaN above every numeric)."""
+    import numpy as np
+
+    denom = np.sqrt(_fold_sqnorm_np(a)) * np.sqrt(_fold_sqnorm_np(b))
+    null = denom == 0.0
+    cos = _round6_half_up_np(
+        _fold_dot_np(a, b) / np.where(null, 1.0, denom))
+    cos[null] = np.nan
+    key = np.where(np.isnan(cos), np.inf, cos)
+    key[null] = -np.inf
+    return cos, key
 
 
 _COSINE_SQL = """
@@ -4722,13 +4745,12 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r6 optimization (guide §4.2): the N x 5 interpreted fold
     expressions move into one Arrow-batched map computing EXACT
-    left-fold cosines (dimension-axis accumulation — see
-    _fold_dot_np) rounded via _round6_half_up_np; each task emits only
-    its per-query top-3 candidates (exact rounded values, so the
-    cross-task ranking is unchanged), and a tiny window over
-    tasks x 15 rows picks the global top-3 with the identical
-    (cosine desc, vec_id asc) order. Query vectors are a bounded
-    driver collect, like the IVF pivots."""
+    rounded cosines (_cosine_np); each task emits only its per-query
+    top-3 candidates (exact rounded values, so the cross-task ranking
+    is unchanged), and a tiny window over tasks x 15 rows picks the
+    global top-3 with the identical (cosine desc nulls last, vec_id
+    asc) order. Query vectors are a bounded driver collect, like the
+    IVF pivots."""
     emb = _read(spark, sf_dir, "embeddings")
     qrows = sorted(
         emb.where(F.col("vec_id") < 5)
@@ -4738,41 +4760,28 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_vecs = [[float(x) for x in r.embedding] for r in qrows]
 
     def score_fn(batches):
-        import math
         import numpy as np
         import pandas as pd
-        qv = [np.asarray(v, dtype=np.float64) for v in q_vecs]
-        qnorms = []
-        for v in qv:
-            acc = 0.0
-            for x in v.tolist():
-                acc += x * x
-            qnorms.append(math.sqrt(acc))
+        qv = np.asarray(q_vecs, dtype=np.float64)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64)
                             for v in pdf["embedding"]])
             vec_ids = pdf["vec_id"].to_numpy()
-            enorm = np.sqrt(_fold_sqnorm_np(mat))
+            cos, key = _cosine_np(mat[:, None, :], qv)
             out_q, out_v, out_c = [], [], []
-            for qi, v in enumerate(qv):
-                denom = enorm * qnorms[qi]
-                cos = _round6_half_up_np(_fold_dot_np(mat, v) / denom)
-                mask = vec_ids != q_ids[qi]
+            for qi, q_id in enumerate(q_ids):
+                mask = vec_ids != q_id
                 cand_ids = vec_ids[mask]
-                cand_cos = cos[mask]
                 # per-batch top-3 by (cosine desc, vec_id asc): sort by
-                # vec_id first, then stable-sort by -cosine. NaN maps
-                # to +inf in the sort key (Spark's desc window orders
-                # NaN above every numeric)
-                key = np.where(np.isnan(cand_cos), np.inf, cand_cos)
+                # vec_id first, then stable-sort by -key
                 order = np.argsort(cand_ids, kind="stable")
-                order = order[np.argsort(-key[order],
+                order = order[np.argsort(-key[mask, qi][order],
                                          kind="stable")][:3]
-                out_q.extend([q_ids[qi]] * len(order))
+                out_q.extend([q_id] * len(order))
                 out_v.extend(cand_ids[order])
-                out_c.extend(cand_cos[order])
+                out_c.extend(cos[mask, qi][order])
             yield pd.DataFrame({
                 "q_id": pd.Series(out_q, dtype="int64"),
                 "vec_id": pd.Series(out_v, dtype="int64"),
@@ -4856,14 +4865,14 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-table sign-LSH ANN (the 100 TB shape).
 
     Signatures are 16-bit bit-packed sign patterns against 4 independent
-    hyperplane tables, computed as pure column expressions (one
-    whole-stage-codegen'd projection per row, no shuffle). A vector is a
-    candidate when it shares a (table, bucket) pair with a query —
-    multi-table OR-probing. Candidate sets shrink ~N/2^16 per table, so
-    the expensive cosine runs on a sublinear slice; the only shuffles are
-    the candidate-set join on vec_id and the final per-query top-k. Dot
-    products are left-fold doubles in index order on both engines so the
-    sign bits agree bit-for-bit.
+    hyperplane tables, computed in one Arrow-batched NumPy map per row
+    batch (_ann_signatures, no shuffle). A vector is a candidate when it
+    shares a (table, bucket) pair with a query — multi-table
+    OR-probing. Candidate sets shrink ~N/2^16 per table, so the
+    expensive cosine runs on a sublinear slice; the only shuffles are
+    the candidate-set join on vec_id and the final per-query top-k
+    (_rerank_top3). Dot products are left-fold doubles in index order
+    on both engines so the sign bits agree bit-for-bit.
 
     Recall on the driver's ISOTROPIC-RANDOM embeddings is data-bounded
     (nearest neighbors sit at ~68 degrees; any sublinear LSH misses them
@@ -4871,49 +4880,11 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     and proves recall 1.0 with a sublinear candidate set on clustered
     vectors, the regime real embedding corpora live in.
 
-    r6 optimization (guide §4.2): the 64 plane dot products per vector
-    used to run as interpreted fold expressions (~4096 interpreted
-    multiply-adds/row); the signature stage now accumulates the SAME
-    left fold vectorized over the dimension axis in NumPy —
-    ``acc += E[:, j] * w[j]`` applies the identical double operation
-    sequence per row, so every dot (and its sign, and the bucket) is
-    bit-exact, no tolerance argument needed. The signature frame
-    localCheckpoints because a filter cannot push below the opaque
-    Python map (the query branch would otherwise re-run the full
-    sweep)."""
+    The signature frame localCheckpoints because a filter cannot push
+    below the opaque Python map (the query branch would otherwise re-run
+    the full sweep)."""
     emb = _read(spark, sf_dir, "embeddings")
-    planes = [[_ann_plane(t, b) for b in range(_ANN_BITS)]
-              for t in range(_ANN_TABLES)]
-
-    def sig_fn(batches):
-        import numpy as np
-        import pandas as pd
-        pl = np.asarray(planes, dtype=np.float64)   # (T, B, D)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.stack([np.asarray(v, dtype=np.float64)
-                            for v in pdf["embedding"]])
-            n, d = mat.shape
-            buckets = np.zeros((n, _ANN_TABLES), dtype=np.int64)
-            for t in range(_ANN_TABLES):
-                for b in range(_ANN_BITS):
-                    acc = np.zeros(n)
-                    w = pl[t, b]
-                    for j in range(d):
-                        acc += mat[:, j] * w[j]   # exact left fold
-                    # Spark orders NaN above every numeric: NaN > 0
-                    bit = (acc > 0) | np.isnan(acc)
-                    buckets[:, t] |= bit.astype(np.int64) << b
-            yield pd.DataFrame({
-                "vec_id": np.repeat(pdf["vec_id"].to_numpy(),
-                                    _ANN_TABLES),
-                "t": np.tile(np.arange(_ANN_TABLES, dtype=np.int64), n),
-                "bucket": buckets.reshape(-1),
-            })
-
-    sigs = emb.select("vec_id", "embedding").mapInPandas(
-        sig_fn, "vec_id long, t long, bucket long").localCheckpoint()
+    sigs = _ann_signatures(emb).localCheckpoint()
 
     qsigs = sigs.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), "t", "bucket")
@@ -4927,22 +4898,64 @@ def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             probe_offsets,
             lambda m: F.col("bucket").bitwiseXOR(m.cast("long")))
         ).alias("bucket"))
-    qvecs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-
     cands = (
         sigs.join(F.broadcast(qprobes), ["t", "bucket"])
         .where(F.col("vec_id") != F.col("q_id"))
         .select("q_id", "vec_id").distinct()
     )
+    return _rerank_top3(emb, cands)
+
+
+def _ann_signatures(emb: DataFrame) -> DataFrame:
+    """(vec_id, t, bucket) for every vector and hyperplane table — the
+    oracle's `sigs` CTE. All 64 plane dots of a row batch accumulate as
+    one exact left fold over the dimension axis (_fold_dot_np), so
+    every dot, its sign and the bucket are bit-equal to the oracle's
+    list_reduce; no tolerance argument is needed."""
+    planes = [[_ann_plane(t, b) for b in range(_ANN_BITS)]
+              for t in range(_ANN_TABLES)]
+
+    def sig_fn(batches):
+        import numpy as np
+        import pandas as pd
+        pl = np.asarray(planes, dtype=np.float64)   # (T, B, D)
+        shifts = np.arange(_ANN_BITS, dtype=np.int64)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            mat = np.stack([np.asarray(v, dtype=np.float64)
+                            for v in pdf["embedding"]])
+            dots = _fold_dot_np(mat[:, None, None, :], pl)   # (n, T, B)
+            # Spark orders NaN above every numeric: NaN > 0
+            bits = (dots > 0) | np.isnan(dots)
+            buckets = (bits.astype(np.int64) << shifts).sum(axis=2)
+            yield pd.DataFrame({
+                "vec_id": np.repeat(pdf["vec_id"].to_numpy(),
+                                    _ANN_TABLES),
+                "t": np.tile(np.arange(_ANN_TABLES, dtype=np.int64),
+                             len(mat)),
+                "bucket": buckets.reshape(-1),
+            })
+
+    return emb.select("vec_id", "embedding").mapInPandas(
+        sig_fn, "vec_id long, t long, bucket long")
+
+
+def _rerank_top3(emb: DataFrame, cands: DataFrame) -> DataFrame:
+    """The exact rerank of the ANN queries — their oracles' `scored` CTE
+    and final window: candidate (q_id, vec_id) pairs join the probe
+    queries' vectors (vec_id < 5, broadcast) and the candidates'
+    embeddings, score with _cosine_col, and keep each query's top 3 by
+    (cosine desc nulls last, vec_id asc)."""
+    qvecs = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
     scored = (
         cands.join(F.broadcast(qvecs), "q_id")
         .join(emb, "vec_id")
+        .select("q_id", "vec_id",
+                _cosine_col(F.col("q_vec"), F.col("embedding"))
+                .alias("cosine"))
     )
-    cosine = F.round(
-        _dot(F.col("q_vec"), F.col("embedding"))
-        / (_norm(F.col("q_vec")) * _norm(F.col("embedding"))), 6)
-    scored = scored.select("q_id", "vec_id", cosine.alias("cosine"))
     window = Window.partitionBy("q_id").orderBy(
         F.desc("cosine"), F.asc("vec_id"))
     return (scored.withColumn("rn", F.row_number().over(window))
@@ -5142,25 +5155,40 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the data (a deterministic stand-in for trained k-means
     centroids), nprobe=2.
 
-    Cell assignment is a SHUFFLE-FREE per-row argmax: the 16 pivots are
-    collected once at plan build (an index-build step, like loading a
-    trained quantizer) and inlined as literals, so assignment is one
-    whole-stage-codegen'd projection. Queries probe their 2 nearest
-    cells; the expensive cosine runs only on the candidate cells' members
-    (~nprobe/K of the corpus). Identical left-fold double arithmetic on
-    both engines keeps the argmax and ordering bit-stable.
-
-    r6 optimization (guide §4.2): the per-row 16-cell argmax used to
-    run as an interpreted array_sort over 16 fold expressions
-    (~2k interpreted double ops/row). Assignment now runs in NumPy:
-    exact left-fold dots/norms vectorized over the dimension axis
-    (bit-equal by construction — see _fold_dot_np), the round-6 via
-    _round6_half_up_np (decimal-HALF_UP with a Decimal recheck in the
-    half-boundary band), and the top-2 argmax with the same
-    (cosine desc, cell asc) tie-break. The assignment frame
-    localCheckpoints because filters cannot push below the Python
-    map."""
+    Cell assignment is a SHUFFLE-FREE per-row argmax in NumPy
+    (_ivf_assign). Queries probe their 2 nearest cells; the expensive
+    cosine runs only on the candidate cells' members (~nprobe/K of the
+    corpus, _rerank_top3). Identical left-fold double arithmetic on
+    both engines keeps the argmax and ordering bit-stable."""
     emb = _read(spark, sf_dir, "embeddings")
+    with_cells = _ivf_assign(emb)
+    cells = with_cells.select("vec_id", "cell")
+    qprobe = (
+        with_cells.where(F.col("vec_id") < 5)
+        .select(F.col("vec_id").alias("q_id"),
+                F.explode(F.array("cell", "cell2")).alias("cell"))
+    )
+    cands = (
+        cells.join(F.broadcast(qprobe), "cell")
+        .where(F.col("vec_id") != F.col("q_id"))
+        .select("q_id", "vec_id").distinct()
+    )
+    return _rerank_top3(emb, cands)
+
+
+def _ivf_assign(emb: DataFrame) -> DataFrame:
+    """(vec_id, cell, cell2): every vector's nearest and second-nearest
+    IVF pivot — rn 1 and 2 of _IVF_ASSIGN_SQL, which the
+    similarity_ivf and dedup_embedding_cosine oracles share. The 16
+    pivots are collected once at plan build (an index-build step, like
+    loading a trained quantizer); each Arrow batch is scored against
+    all of them by _cosine_np, and a stable sort on its key gives the
+    oracle's (cosine desc nulls last, cell asc) order.
+
+    r6 optimization (guide §4.2): the argmax used to run as an
+    interpreted array_sort over 16 fold expressions (~2k interpreted
+    double ops/row). The frame localCheckpoints because filters cannot
+    push below the Python map."""
     pivots = sorted(
         emb.where((F.col("vec_id") >= _IVF_PIVOT_LO)
                   & (F.col("vec_id") < _IVF_PIVOT_HI))
@@ -5170,70 +5198,26 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     piv_vecs = [[float(x) for x in p.embedding] for p in pivots]
 
     def assign_fn(batches):
-        import math
         import numpy as np
         import pandas as pd
-        pv = [np.asarray(v, dtype=np.float64) for v in piv_vecs]
-        # pnorm exactly as the old literal expression: left fold of
-        # x*x over the inlined doubles, then sqrt
-        pnorms = []
-        for v in pv:
-            acc = 0.0
-            for x in v.tolist():
-                acc += x * x
-            pnorms.append(math.sqrt(acc))
+        pv = np.asarray(piv_vecs, dtype=np.float64)
         ids = np.asarray(piv_ids, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
             mat = np.stack([np.asarray(v, dtype=np.float64)
                             for v in pdf["embedding"]])
-            qnorm = np.sqrt(_fold_sqnorm_np(mat))
-            scored = np.empty((mat.shape[0], len(pv)))
-            for c, v in enumerate(pv):
-                denom = qnorm * pnorms[c]
-                scored[:, c] = _round6_half_up_np(
-                    _fold_dot_np(mat, v) / denom)
-            best = scored.argmax(axis=1)        # ties -> lowest cell
-            rows = np.arange(mat.shape[0])
-            scored[rows, best] = -np.inf
-            second = scored.argmax(axis=1)
+            _, key = _cosine_np(mat[:, None, :], pv)
+            top2 = np.argsort(-key, axis=1, kind="stable")[:, :2]
             yield pd.DataFrame({
                 "vec_id": pdf["vec_id"].to_numpy(),
-                "cell": ids[best],
-                "cell2": ids[second],
+                "cell": ids[top2[:, 0]],
+                "cell2": ids[top2[:, 1]],
             })
 
-    with_cells = (emb.select("vec_id", "embedding")
-                  .mapInPandas(assign_fn,
-                               "vec_id long, cell long, cell2 long")
-                  .localCheckpoint())
-    cells = with_cells.select("vec_id", "cell")
-    qprobe = (
-        with_cells.where(F.col("vec_id") < 5)
-        .select(F.col("vec_id").alias("q_id"),
-                F.explode(F.array("cell", "cell2")).alias("cell"))
-    )
-    qvecs = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec"))
-
-    cands = (
-        cells.join(F.broadcast(qprobe), "cell")
-        .where(F.col("vec_id") != F.col("q_id"))
-        .select("q_id", "vec_id").distinct()
-    )
-    cosine = F.round(
-        _dot(F.col("q_vec"), F.col("embedding"))
-        / (_norm(F.col("q_vec")) * _norm(F.col("embedding"))), 6)
-    scored = (
-        cands.join(F.broadcast(qvecs), "q_id")
-        .join(emb, "vec_id")
-        .select("q_id", "vec_id", cosine.alias("cosine"))
-    )
-    window = Window.partitionBy("q_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id"))
-    return (scored.withColumn("rn", F.row_number().over(window))
-            .where(F.col("rn") <= 3).select("q_id", "vec_id", "cosine"))
+    return (emb.select("vec_id", "embedding")
+            .mapInPandas(assign_fn, "vec_id long, cell long, cell2 long")
+            .localCheckpoint())
 
 
 _KM_K = 8
@@ -5455,23 +5439,21 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 0.3
 
 
-def semdedup_pairs(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
-                   k: int = _KM_K, iters: int = _KM_ITERS) -> DataFrame:
+def semdedup_pairs(emb: DataFrame) -> DataFrame:
     """SemDeDup-style semantic dedup (public method: Abbas et al.
     2023, "SemDeDup: Data-efficient learning at web-scale through
     semantic deduplication"): cluster embeddings with k-means, then
     mark a vector a duplicate if a LOWER-id member of the same
-    cluster has cosine similarity >= tau — the lowest id in each
-    similarity neighborhood survives as the representative. Returns
-    only the duplicate rows: (vec_id, cluster, dup_of = smallest
-    qualifying lower id, n_dup_neighbors).
+    cluster has cosine similarity >= _SEMDEDUP_TAU — the lowest id in
+    each similarity neighborhood survives as the representative.
+    Returns only the duplicate rows: (vec_id, cluster, dup_of =
+    smallest qualifying lower id, n_dup_neighbors).
 
     Scale shape (100 TB verdict): the expensive pairwise cosine runs
     ONLY within clusters — the published mitigation is k growing with
     N so per-cluster membership stays bounded (SemDeDup uses ~100k
     clusters at web scale), making the per-cluster self-join
-    O(N * cluster_size), not O(N^2) — pass ``k`` to apply it (init
-    vectors are {_KM_INIT_LO}..{_KM_INIT_LO}+k-1).
+    O(N * cluster_size), not O(N^2).
 
     r6 optimization (guide §4.2): the within-cluster pairwise cosine
     used to run as an interpreted fold expression per PAIR (a
@@ -5480,12 +5462,11 @@ def semdedup_pairs(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
     group map per cluster. Threshold behavior stays exact: a pair
     whose BLAS cosine lands within 1e-7 of the decimal round-6
     boundary (BLAS vs left-fold summation differ by < 1e-13) is
-    re-scored with the identical left-fold double arithmetic and
-    BigDecimal-HALF_UP rounding the old expression / the oracle use,
-    so the accepted pair set — and therefore every output row — is
-    bit-identical to the self-join plan's."""
+    re-scored by _cosine_np, the oracle's left-fold arithmetic and
+    HALF_UP rounding, so the accepted pair set — and therefore every
+    output row — is bit-identical to the self-join plan's."""
     ckpt = emb.select("vec_id", "embedding").localCheckpoint()
-    centroids = _km_centroid_loop(ckpt, k, iters)
+    centroids = _km_centroid_loop(ckpt, _KM_K, _KM_ITERS)
     cents = [list(c) for c in centroids]
 
     def assign_with_vec(batches):
@@ -5508,95 +5489,70 @@ def semdedup_pairs(emb: DataFrame, tau: float = _SEMDEDUP_TAU,
         assign_with_vec,
         "vec_id long, cluster int, embedding array<float>")
     return assigned.groupBy("cluster").applyInPandas(
-        _semdedup_cluster_fn(tau),
+        _semdedup_cluster,
         "vec_id long, cluster int, dup_of long, n_dup_neighbors long")
 
 
-def _semdedup_cluster_fn(tau: float):
+def _semdedup_cluster(pdf):
     """Per-cluster pairwise scorer for semdedup_pairs: blocked float64
     matmul over the cluster's (sorted-by-id) matrix, with the
     exact-recheck band described in semdedup_pairs. Returns the rows
     (vec_id, cluster, dup_of, n_dup_neighbors) for members having at
-    least one LOWER-id neighbor with round(cosine, 6) >= tau."""
+    least one LOWER-id neighbor with round(cosine, 6) >= _SEMDEDUP_TAU.
+    A zero-norm member's cosine is NULL and a NaN component's is NaN;
+    both go to the recheck, whose key fails NULL and passes NaN."""
     from decimal import Decimal
 
+    import numpy as np
+    import pandas as pd
+
     # round(cos, 6) >= tau  <=>  decimal(cos) >= tau - 5e-7 (HALF_UP)
-    boundary = Decimal(str(tau)) - Decimal("0.0000005")
-    bf = float(boundary)
+    bf = float(Decimal(str(_SEMDEDUP_TAU)) - Decimal("0.0000005"))
     band = 1e-7
-
-    def exact_ge(a32, b32) -> bool:
-        # the identical left-fold double arithmetic of _dot/_norm and
-        # the oracle's list_reduce, then BigDecimal-style HALF_UP
-        import math
-        ax = a32.tolist()
-        bx = b32.tolist()
-        dot = 0.0
-        for x, y in zip(ax, bx):
-            dot += x * y
-        na = 0.0
-        for x in ax:
-            na += x * x
-        nb = 0.0
-        for y in bx:
-            nb += y * y
-        denom = math.sqrt(na) * math.sqrt(nb)
-        cos = dot / denom if denom != 0.0 else math.nan
-        if math.isnan(cos) or math.isinf(cos):
-            # Spark orders NaN above every numeric; +inf >= tau too
-            return not (cos == -math.inf)
-        return Decimal(repr(cos)) >= boundary
-
-    def fn(pdf):
-        import numpy as np
-        import pandas as pd
-        n = len(pdf)
-        cols = ["vec_id", "cluster", "dup_of", "n_dup_neighbors"]
-        if n < 2:
-            return pd.DataFrame({c: pd.Series([], dtype="int64")
-                                 for c in cols})
-        order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
-        ids = pdf["vec_id"].to_numpy()[order]
-        vecs32 = [np.asarray(v, dtype=np.float32)
-                  for v in pdf["embedding"].to_numpy()[order]]
-        mat = np.stack(vecs32).astype(np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
-        safe = np.where(norms == 0.0, 1.0, norms)
-        first = np.full(n, -1, dtype=np.int64)
-        cnt = np.zeros(n, dtype=np.int64)
-        rows = np.arange(n)
-        # column-block size adapts to the cluster so the n x block
-        # cosine buffer stays ~256 MB at any membership (the driver
-        # escalates SF when the suite is fast — a fixed 2048 would
-        # make the buffer grow linearly with cluster size)
-        block = max(128, min(2048, (1 << 25) // n))
-        for j0 in range(0, n, block):
-            j1 = min(j0 + block, n)
-            cos = mat @ mat[j0:j1].T
-            cos /= safe[:, None]
-            cos /= safe[j0:j1][None, :]
-            # Spark orders NaN (zero-norm cosine) above every numeric
-            cos[norms == 0.0, :] = np.inf
-            cos[:, norms[j0:j1] == 0.0] = np.inf
-            tri = rows[:, None] < np.arange(j0, j1)[None, :]
-            acc = tri & (cos > bf + band)
-            near = tri & (np.abs(cos - bf) <= band)
-            for i, jl in zip(*np.nonzero(near)):
-                if exact_ge(vecs32[i], vecs32[j0 + jl]):
-                    acc[i, jl] = True
-            bc = acc.sum(axis=0)
-            fi = np.where(bc > 0, acc.argmax(axis=0), -1)
-            cnt[j0:j1] = bc
-            first[j0:j1] = fi
-        keep = cnt > 0
-        return pd.DataFrame({
-            "vec_id": ids[keep],
-            "cluster": pdf["cluster"].to_numpy()[order][keep],
-            "dup_of": ids[first[keep]],
-            "n_dup_neighbors": cnt[keep],
-        })
-
-    return fn
+    n = len(pdf)
+    cols = ["vec_id", "cluster", "dup_of", "n_dup_neighbors"]
+    if n < 2:
+        return pd.DataFrame({c: pd.Series([], dtype="int64")
+                             for c in cols})
+    order = np.argsort(pdf["vec_id"].to_numpy(), kind="stable")
+    ids = pdf["vec_id"].to_numpy()[order]
+    mat = np.stack([np.asarray(v, dtype=np.float64)
+                    for v in pdf["embedding"].to_numpy()[order]])
+    norms = np.sqrt(np.einsum("ij,ij->i", mat, mat))
+    safe = np.where(norms == 0.0, 1.0, norms)
+    first = np.full(n, -1, dtype=np.int64)
+    cnt = np.zeros(n, dtype=np.int64)
+    rows = np.arange(n)
+    # column-block size adapts to the cluster so the n x block
+    # cosine buffer stays ~256 MB at any membership (the driver
+    # escalates SF when the suite is fast — a fixed 2048 would
+    # make the buffer grow linearly with cluster size)
+    block = max(128, min(2048, (1 << 25) // n))
+    for j0 in range(0, n, block):
+        j1 = min(j0 + block, n)
+        cos = mat @ mat[j0:j1].T
+        cos /= safe[:, None]
+        cos /= safe[j0:j1][None, :]
+        cos[norms == 0.0, :] = np.nan
+        cos[:, norms[j0:j1] == 0.0] = np.nan
+        tri = rows[:, None] < np.arange(j0, j1)[None, :]
+        acc = tri & (cos > bf + band)
+        near = np.nonzero(
+            tri & ((np.abs(cos - bf) <= band) | np.isnan(cos)))
+        if len(near[0]):
+            _, key = _cosine_np(mat[near[0]], mat[j0 + near[1]])
+            acc[near] = key >= _SEMDEDUP_TAU
+        bc = acc.sum(axis=0)
+        fi = np.where(bc > 0, acc.argmax(axis=0), -1)
+        cnt[j0:j1] = bc
+        first[j0:j1] = fi
+    keep = cnt > 0
+    return pd.DataFrame({
+        "vec_id": ids[keep],
+        "cluster": pdf["cluster"].to_numpy()[order][keep],
+        "dup_of": ids[first[keep]],
+        "n_dup_neighbors": cnt[keep],
+    })
 
 
 @_register("semdedup_embedding", f"""
@@ -5716,52 +5672,22 @@ SELECT vec_a, vec_b, cosine FROM scored WHERE cosine >= 0.3
 """)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: candidate pairs restricted to the same
-    IVF cell (the blocking that keeps this subquadratic — cell-local
-    pairs are ~N^2/K instead of N^2), scored with the shared left-fold
-    cosine, thresholded. The 0.3 threshold is calibrated to the driver's
-    isotropic embeddings (true near-dups in a real corpus sit >0.9 and
-    land in the same cell with high probability)."""
+    IVF cell (_ivf_assign — the blocking that keeps this subquadratic:
+    cell-local pairs are ~N^2/K instead of N^2), scored with
+    _cosine_col, thresholded. The 0.3 threshold is calibrated to the
+    driver's isotropic embeddings (true near-dups in a real corpus sit
+    >0.9 and land in the same cell with high probability)."""
     emb = _read(spark, sf_dir, "embeddings")
-    pivots = sorted(
-        emb.where((F.col("vec_id") >= _IVF_PIVOT_LO)
-                  & (F.col("vec_id") < _IVF_PIVOT_HI))
-        .select("vec_id", "embedding").collect(),
-        key=lambda r: r.vec_id)
-
-    def cos_sql(vec: list) -> str:
-        arr = ", ".join(f"{float(x)!r}D" for x in vec)
-        dot = ("aggregate(zip_with(embedding, array({a}), (x, w) -> "
-               "cast(x as double) * w), 0.0D, (acc, v) -> acc + v)"
-               .format(a=arr))
-        qnorm = ("sqrt(aggregate(transform(embedding, x -> "
-                 "cast(x as double) * cast(x as double)), 0.0D, "
-                 "(acc, v) -> acc + v))")
-        pnorm = ("sqrt(aggregate(transform(array({a}), x -> x * x), "
-                 "0.0D, (acc, v) -> acc + v))".format(a=arr))
-        return f"round({dot} / ({qnorm} * {pnorm}), 6)"
-
-    ranked = ", ".join(
-        f"named_struct('c', {cos_sql(list(p.embedding))}, "
-        f"'cell', {int(p.vec_id)}L)"
-        for p in pivots)
-    argmax = (
-        f"array_sort(array({ranked}), (l, r) -> "
-        "CASE WHEN l.c > r.c THEN -1 WHEN l.c < r.c THEN 1 "
-        "WHEN l.cell < r.cell THEN -1 ELSE 1 END)[0].cell")
-
-    cells = emb.select("vec_id", "embedding",
-                       F.expr(argmax).alias("cell"))
+    cells = _ivf_assign(emb).select("vec_id", "cell").join(emb, "vec_id")
     a = cells.select(F.col("cell"), F.col("vec_id").alias("vec_a"),
                      F.col("embedding").alias("emb_a"))
     b = cells.select(F.col("cell"), F.col("vec_id").alias("vec_b"),
                      F.col("embedding").alias("emb_b"))
-    cosine = F.round(
-        _dot(F.col("emb_a"), F.col("emb_b"))
-        / (_norm(F.col("emb_a")) * _norm(F.col("emb_b"))), 6)
     return (
         a.join(b, "cell")
         .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cosine.alias("cosine"))
+        .select("vec_a", "vec_b",
+                _cosine_col(F.col("emb_a"), F.col("emb_b")).alias("cosine"))
         .where(F.col("cosine") >= 0.3)
     )
 

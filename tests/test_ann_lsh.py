@@ -99,15 +99,28 @@ def test_candidate_set_is_tiny_on_the_random_table(spark):
 
 
 def test_spark_signatures_match_numpy_reference(spark):
-    """The Spark column-expression signature equals the numpy batch
-    computation bit-for-bit (same planes, same fold order concern: numpy
-    sums differ from left folds only on ties, which the assert exposes)."""
-    from material_parsers_spark.queries import SPARK_QUERIES, _read
+    """The Spark signature stage (the NumPy left fold of _fold_dot_np)
+    equals the oracle's `sigs` CTE bit-for-bit: every (vec_id, table)
+    lands in the same 16-bit bucket on sf0.01, row for row."""
+    import duckdb
 
-    emb = _read(spark, "/root/testdata/sf0.01", "embeddings")
-    out = SPARK_QUERIES["similarity_ann_lsh"](
-        spark, "/root/testdata/sf0.01")
-    # the query runs end-to-end and returns the top-k schema
-    rows = out.collect()
-    assert set(out.columns) == {"q_id", "vec_id", "cosine"}
-    assert all(row.cosine <= 1.0 for row in rows)
+    from material_parsers_spark.queries import (
+        ORACLE_SQL,
+        _ann_signatures,
+        _read,
+    )
+
+    sf_dir = "/root/testdata/sf0.01"
+    emb = _read(spark, sf_dir, "embeddings")
+    spark_rows = sorted(tuple(r) for r in _ann_signatures(emb).collect())
+
+    # the oracle's planes + sigs CTEs, up to where the query CTEs begin
+    ctes = ORACLE_SQL["similarity_ann_lsh"].split("qsigs AS")[0]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"'{sf_dir}/embeddings.parquet'")
+    oracle_rows = sorted(con.execute(
+        ctes.rstrip().rstrip(",")
+        + " SELECT vec_id, t, bucket FROM sigs").fetchall())
+    assert len(spark_rows) == emb.count() * _ANN_TABLES
+    assert spark_rows == oracle_rows

@@ -28,6 +28,10 @@ PYTHON_ALLOWED = {
     "kmeans_embeddings", "semdedup_embedding",
     "similarity_ann_lsh", "similarity_ivf", "similarity_pq",
     "similarity_topk", "similarity_recall_report",
+    # the IVF cell assignment similarity_ivf and dedup_embedding_cosine
+    # share (_ivf_assign) replaced the latter's interpreted array_sort
+    # argmax
+    "dedup_embedding_cosine",
     # r6: BPE apply memoizes the merge chain per task behind Arrow
     # (still zero-shuffle; see test_bpe_apply_is_a_zero_shuffle_map)
     "bpe_encode_stats",
