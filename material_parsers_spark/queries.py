@@ -5183,12 +5183,9 @@ def _ivf_assign(emb: DataFrame) -> DataFrame:
     pivots are collected once at plan build (an index-build step, like
     loading a trained quantizer); each Arrow batch is scored against
     all of them by _cosine_np, and a stable sort on its key gives the
-    oracle's (cosine desc nulls last, cell asc) order.
-
-    r6 optimization (guide §4.2): the argmax used to run as an
-    interpreted array_sort over 16 fold expressions (~2k interpreted
-    double ops/row). The frame localCheckpoints because filters cannot
-    push below the Python map."""
+    oracle's (cosine desc nulls last, cell asc) order. The frame
+    localCheckpoints because filters cannot push below the Python
+    map."""
     pivots = sorted(
         emb.where((F.col("vec_id") >= _IVF_PIVOT_LO)
                   & (F.col("vec_id") < _IVF_PIVOT_HI))
