@@ -4749,8 +4749,8 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-3 candidates (exact rounded values, so the cross-task ranking
     is unchanged), and a tiny window over tasks x 15 rows picks the
     global top-3 with the identical (cosine desc nulls last, vec_id
-    asc) order. Query vectors are a bounded driver collect, like the
-    IVF pivots."""
+    asc) order. Query vectors are a bounded collect, like the IVF
+    pivots."""
     emb = _read(spark, sf_dir, "embeddings")
     qrows = sorted(
         emb.where(F.col("vec_id") < 5)
@@ -5521,9 +5521,9 @@ def _semdedup_cluster(pdf):
     cnt = np.zeros(n, dtype=np.int64)
     rows = np.arange(n)
     # column-block size adapts to the cluster so the n x block
-    # cosine buffer stays ~256 MB at any membership (the driver
-    # escalates SF when the suite is fast — a fixed 2048 would
-    # make the buffer grow linearly with cluster size)
+    # cosine buffer stays ~256 MB at any membership (clusters grow
+    # with the scale factor — a fixed 2048 would make the buffer
+    # grow linearly with cluster size)
     block = max(128, min(2048, (1 << 25) // n))
     for j0 in range(0, n, block):
         j1 = min(j0 + block, n)
@@ -5672,8 +5672,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF cell (_ivf_assign — the blocking that keeps this subquadratic:
     cell-local pairs are ~N^2/K instead of N^2), scored with
     _cosine_col, thresholded. The 0.3 threshold is calibrated to the
-    driver's isotropic embeddings (true near-dups in a real corpus sit
-    >0.9 and land in the same cell with high probability)."""
+    synthetic isotropic embeddings (true near-dups in a real corpus
+    sit >0.9 and land in the same cell with high probability)."""
     emb = _read(spark, sf_dir, "embeddings")
     cells = _ivf_assign(emb).select("vec_id", "cell").join(emb, "vec_id")
     a = cells.select(F.col("cell"), F.col("vec_id").alias("vec_a"),

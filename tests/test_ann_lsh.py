@@ -110,15 +110,13 @@ def test_spark_signatures_match_numpy_reference(spark):
         _read,
     )
 
-    sf_dir = "/root/testdata/sf0.01"
-    emb = _read(spark, sf_dir, "embeddings")
+    emb = _read(spark, "/root/testdata/sf0.01", "embeddings")
     spark_rows = sorted(tuple(r) for r in _ann_signatures(emb).collect())
 
     # the oracle's planes + sigs CTEs, up to where the query CTEs begin
     ctes = ORACLE_SQL["similarity_ann_lsh"].split("qsigs AS")[0]
     con = duckdb.connect()
-    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
-                f"'{sf_dir}/embeddings.parquet'")
+    con.register("embeddings", emb.toArrow())
     oracle_rows = sorted(con.execute(
         ctes.rstrip().rstrip(",")
         + " SELECT vec_id, t, bucket FROM sigs").fetchall())
