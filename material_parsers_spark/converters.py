@@ -202,31 +202,6 @@ def labelstudio_documents(paragraphs: List[dict]) -> List[dict]:
     return tasks
 
 
-def write_labelstudio(tei_df, path: str) -> None:
-    """Distributed S13 over ``read_tei`` output: one JSON task list per
-    document, written as text partitioned by doc."""
-    import json
-
-    import pandas as pd
-
-    def build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values("para_idx")
-        paragraphs = [
-            {"text": row["text"],
-             "spans": ([dict(s) for s in row["spans"]]
-                       if row["spans"] is not None else [])}
-            for _, row in pdf.iterrows()
-        ]
-        return pd.DataFrame({
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "tasks": [json.dumps(labelstudio_documents(paragraphs))],
-        })
-
-    (tei_df.groupBy("doc_id")
-     .applyInPandas(build, schema="doc_id string, tasks string")
-     .write.mode("overwrite").partitionBy("doc_id").text(path))
-
-
 # ---------------------------------------------------------------------------
 # S6: WebAnno TSV 3.2 -> paragraphs -> TEI
 # ---------------------------------------------------------------------------

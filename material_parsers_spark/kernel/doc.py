@@ -318,20 +318,3 @@ def get_sentence_boundaries(words: List[str], spaces: List[bool]) -> List[Tuple[
             offset += 1
 
     return boundaries
-
-
-def filter_spans(spans: List[dict]) -> List[dict]:
-    """Maximal non-overlap selection (P4, `linking_module.py:46-59`):
-    sort by (length desc, start asc), greedily keep non-overlapping."""
-    sorted_spans = sorted(
-        spans,
-        key=lambda s: (s["token_end"] - s["token_start"], -s["token_start"]),
-        reverse=True,
-    )
-    result = []
-    seen = set()
-    for span in sorted_spans:
-        if span["token_start"] not in seen and span["token_end"] - 1 not in seen:
-            result.append(span)
-        seen.update(range(span["token_start"], span["token_end"]))
-    return sorted(result, key=lambda s: s["token_start"])

@@ -1,7 +1,10 @@
 """Entity-linking resolvers (operators J1-J6, J10 in SURVEY.md §2.7).
 
 Re-expresses `linking/relationships_resolver.py` over the merged-token doc
-model. All linking is within one sentence; distances are character-centroid
+model. The resolvers link across whatever doc they are given:
+`kernel/turns.py::link_paragraph` builds one doc per turn (one per
+paragraph for `service.process_link`), so a link can join entities in
+different sentences of that turn. Distances are character-centroid
 based and must match the reference's golden values digit-for-digit
 (`tests/test_relationship_resolver.py:425-468`: 7.5, 18, 27.0, 23.5) —
 including the reference's unparenthesized ``abs(pivot - start_idx + L/2)``

@@ -78,12 +78,3 @@ def tokenize_and_filter(text: str) -> Tuple[List[str], List[Tuple[int, int]]]:
             final_tokens.append(tok)
             final_offsets.append(off)
     return final_tokens, final_offsets
-
-
-def tokenize_with_dicts(text: str) -> List[dict]:
-    """Tokenize into the span-algebra token dict shape used by the linker."""
-    tokens, offsets = tokenize(text)
-    return [
-        {"text": tokens[i], "offset_start": offsets[i][0], "offset_end": offsets[i][1]}
-        for i in range(len(tokens))
-    ]

@@ -1,6 +1,6 @@
 """Per-turn extraction kernel: text -> (tokens, spans, materials).
 
-The single pure function the Spark layer lifts into an Arrow-batched pandas
+The single pure function the Spark layer lifts into an Arrow scalar-iterator
 UDF (SURVEY.md §3.1 re-expression). Tokenizes ONCE and reuses the token
 array across tagging, clustering, extraction and linking (manual CSE — the
 reference re-tokenizes per stage, `material_parser_ml.py:53` +
@@ -9,6 +9,7 @@ reference re-tokenizes per stage, `material_parser_ml.py:53` +
 
 from __future__ import annotations
 
+from bisect import bisect_left, bisect_right
 from typing import List, Optional
 
 from .doc import build_doc, compute_span_id, convert_tokens
@@ -68,19 +69,23 @@ def extract_turn(text: Optional[str],
                     if t not in BLANKS]
         matched = matcher.match_filtered(
             [t for t, _ in filtered], [o for _, o in filtered], text)
+        # tokens are contiguous and non-empty, so both offset lists are
+        # strictly increasing: the tokens inside [start, end] are the run
+        # from the first start >= start to the last end <= end
+        starts = [o[0] for o in offsets]
+        ends = [o[1] for o in offsets]
         for ent in matched:
-            token_ids = [i for i in range(len(tokens))
-                         if offsets[i][0] >= ent["start"]
-                         and offsets[i][1] <= ent["end"]]
-            if not token_ids:
+            first = bisect_left(starts, ent["start"])
+            stop = bisect_right(ends, ent["end"])
+            if first >= stop:
                 continue
             spans.append({
                 "text": ent["text"],
                 "type": ent["label"],
                 "offset_start": ent["start"],
                 "offset_end": ent["end"],
-                "token_start": token_ids[0],
-                "token_end": token_ids[-1] + 1,
+                "token_start": first,
+                "token_end": stop,
                 "linkable": False,
             })
 

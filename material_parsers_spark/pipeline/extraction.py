@@ -1,8 +1,10 @@
 """The extraction pipeline: turns DataFrame -> extraction DataFrame.
 
 Spark re-expression of the reference's /process/material + /process/link
-flows (SURVEY.md §3.1-3.2): one Arrow-batched pandas UDF per turn running
-the pure kernel, with the dictionary trie broadcast once. The hot path is
+flows (SURVEY.md §3.1-3.2): one Arrow scalar-iterator UDF per turn running
+the pure kernel. Per session the pattern list is broadcast once, per
+Python worker process the dictionary trie is built once, and per Arrow
+batch the kernel runs once per distinct text. The hot path is
 shuffle-free — per-turn rows are independent; the only shuffle is the
 rollup.
 
@@ -13,13 +15,17 @@ filter + project. No groupBy, no join, no window in the hot path.
 
 from __future__ import annotations
 
+import hashlib
 import json
+import pickle
 from functools import lru_cache
 from typing import Callable, Iterator, Optional
 
-import pandas as pd
+import pyarrow as pa
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..kernel.gazetteer import crystal_structure_patterns, space_group_patterns
 from .schemas import EXTRACTION_TYPE
@@ -72,6 +78,72 @@ def load_full_patterns() -> list:
 # the extraction of an empty text: null spans mark the row for removal
 _NO_TEXT = {"tokens": None, "spans": None, "materials": None}
 
+# driver side: (applicationId, pattern digest, include_tokens, text_of) ->
+# the extraction UDF, whose closure holds that pattern set's broadcast
+_UDFS: dict = {}
+# worker side: pattern digest -> trie, kept while the Python worker lives
+_MATCHERS: dict = {}
+
+
+def _worker_matcher(digest: str, patterns):
+    """This Python worker's trie for one pattern set: built from the
+    broadcast on first use, then reused by every later task the worker
+    runs. Top-level, so the UDF pickles it by reference and the worker
+    reads this module's ``_MATCHERS``."""
+    matcher = _MATCHERS.get(digest)
+    if matcher is None:
+        from ..kernel.gazetteer import TokenTrieMatcher
+
+        matcher = _MATCHERS[digest] = TokenTrieMatcher(patterns.value)
+    return matcher
+
+
+def _extraction_udf(sc: SparkContext, pattern_list: list,
+                    include_tokens: bool,
+                    text_of: Optional[Callable[[str], str]]):
+    """The session's extraction UDF for these arguments, made (and its
+    patterns broadcast) on the first call only. Entries of any other
+    SparkContext are dropped, so the cache holds one context's UDFs."""
+    app_id = sc.applicationId
+    digest = hashlib.sha256(pickle.dumps(pattern_list)).hexdigest()
+    key = (app_id, digest, include_tokens, text_of)
+    if key in _UDFS:
+        return _UDFS[key]
+    for stale in [k for k in _UDFS if k[0] != app_id]:
+        del _UDFS[stale]
+    broadcast_patterns = sc.broadcast(pattern_list)
+    arrow_type = to_arrow_type(EXTRACTION_TYPE)
+
+    @F.arrow_udf(EXTRACTION_TYPE)
+    def extract_udf(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        # imported inside the UDF so executors resolve it locally
+        from ..kernel.turns import extract_turn
+
+        matcher = _worker_matcher(digest, broadcast_patterns)
+        for batch in batches:
+            # one kernel call per distinct text in the batch; a repeated
+            # text shares its first occurrence's row
+            memo: dict = {}
+            rows = []
+            for value in batch.to_pylist():
+                row = memo.get(value)
+                if row is None:
+                    text = text_of(value) if text_of and value else value
+                    row = memo[value] = (
+                        extract_turn(text, matcher,
+                                     include_tokens=include_tokens)
+                        if text else _NO_TEXT)
+                rows.append(row)
+            yield pa.array(rows, type=arrow_type)
+
+    # The kernel is deterministic, but the non-deterministic flag stops
+    # Catalyst from DUPLICATING the UDF: InferFiltersFromGenerate otherwise
+    # pushes a size(materials)>0 predicate below a downstream explode and
+    # re-evaluates the whole Python stage a second time (observed via
+    # .explain: two ArrowEvalPython nodes for one query).
+    _UDFS[key] = extract_udf.asNondeterministic()
+    return _UDFS[key]
+
 
 def _extract(turns: DataFrame, patterns: Optional[list],
              include_tokens: bool,
@@ -79,35 +151,19 @@ def _extract(turns: DataFrame, patterns: Optional[list],
     """Append the ``extraction`` column through the one extraction UDF,
     keeping only rows with text.
 
-    The pattern list is broadcast once and the matcher trie built once
-    per Python worker. ``text_of`` maps each input value to the text the
-    kernel reads (the web path passes its main-content strip). The cheap
+    The UDF is an Arrow scalar-iterator UDF: each batch arrives as a
+    ``pyarrow`` string array and leaves as one struct array built with
+    ``pa.array``, with no pandas conversion either way. It is made once
+    per session and argument set (see ``_extraction_udf``), so repeated
+    calls share one pattern broadcast, and each Python worker builds the
+    trie once. ``text_of`` maps each input value to the text the kernel
+    reads (the web path passes its main-content strip). The cheap
     null/empty filter runs JVM-side before any Python is invoked; a text
     that only turns out empty in Python comes back with null spans and is
     dropped after the UDF."""
     pattern_list = patterns if patterns is not None else load_full_patterns()
-    broadcast_patterns = turns.sparkSession.sparkContext.broadcast(
-        pattern_list)
-
-    @F.pandas_udf(EXTRACTION_TYPE)
-    def extract_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        # imports inside the UDF so executors resolve them locally
-        from ..kernel.gazetteer import TokenTrieMatcher
-        from ..kernel.turns import extract_turn
-
-        matcher = TokenTrieMatcher(broadcast_patterns.value)
-        for series in batches:
-            texts = series if text_of is None else map(text_of, series)
-            rows = [extract_turn(text, matcher, include_tokens=include_tokens)
-                    if text else _NO_TEXT for text in texts]
-            yield pd.DataFrame(rows, columns=["tokens", "spans", "materials"])
-
-    # The kernel is deterministic, but the non-deterministic flag stops
-    # Catalyst from DUPLICATING the UDF: InferFiltersFromGenerate otherwise
-    # pushes a size(materials)>0 predicate below a downstream explode and
-    # re-evaluates the whole Python stage a second time (observed via
-    # .explain: two ArrowEvalPython nodes for one query).
-    extract_udf = extract_udf.asNondeterministic()
+    extract_udf = _extraction_udf(turns.sparkSession.sparkContext,
+                                  pattern_list, include_tokens, text_of)
     return (
         turns
         .where(F.col("text").isNotNull() & (F.length("text") > 0))

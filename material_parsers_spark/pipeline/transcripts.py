@@ -178,9 +178,3 @@ def generate_turns(spark: SparkSession, n_turns: int,
         )
     )
     return df
-
-
-def write_turns(spark: SparkSession, n_turns: int, path: str,
-                partitions: int = 32) -> None:
-    generate_turns(spark, n_turns, partitions).write.mode("overwrite") \
-        .parquet(path)

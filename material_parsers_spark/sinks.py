@@ -277,7 +277,3 @@ def sentence_classification_rows(tei_df: DataFrame) -> DataFrame:
         F.col("text").alias("sentence"),
         F.when(linked, 1).otherwise(0).alias("linked"),
     )
-
-
-def write_sentence_classification_csv(rows: DataFrame, path: str) -> None:
-    rows.write.mode("overwrite").option("header", True).csv(path)

@@ -2,9 +2,9 @@
 
 The reference has no streaming surface (SURVEY.md §2.11) — this is the
 engine's scale path for continuously arriving transcripts: a file-source
-stream of turn parquet, the same Arrow-batched extraction UDF (pandas UDFs
-are streaming-safe), a watermark for late turns, and a windowed per-slice
-rollup. Exactly-once delivery comes from the checkpointLocation; the batch
+stream of turn parquet, the same Arrow scalar-iterator extraction UDF as the
+batch path (it keeps no state across batches, so it is streaming-safe), a
+watermark for late turns, and a windowed per-slice rollup. Exactly-once delivery comes from the checkpointLocation; the batch
 path's manifest/anti-join resume (pipeline/checkpoint.py) remains the
 recovery story for backfills.
 """
