@@ -78,8 +78,10 @@ def load_full_patterns() -> list:
 # the extraction of an empty text: null spans mark the row for removal
 _NO_TEXT = {"tokens": None, "spans": None, "materials": None}
 
-# driver side: (applicationId, pattern digest, include_tokens, text_of) ->
-# the extraction UDF, whose closure holds that pattern set's broadcast
+# driver side: (applicationId, pattern digest) -> that pattern set's
+# broadcast, and (applicationId, pattern digest, include_tokens, text_of)
+# -> the extraction UDF, whose closure holds that broadcast
+_BROADCASTS: dict = {}
 _UDFS: dict = {}
 # worker side: pattern digest -> trie, kept while the Python worker lives
 _MATCHERS: dict = {}
@@ -101,17 +103,23 @@ def _worker_matcher(digest: str, patterns):
 def _extraction_udf(sc: SparkContext, pattern_list: list,
                     include_tokens: bool,
                     text_of: Optional[Callable[[str], str]]):
-    """The session's extraction UDF for these arguments, made (and its
-    patterns broadcast) on the first call only. Entries of any other
-    SparkContext are dropped, so the cache holds one context's UDFs."""
+    """The session's extraction UDF for these arguments, made on the first
+    call only. The patterns are broadcast once per pattern set, whatever
+    the other arguments, so the direct and web paths, with or without
+    tokens, share one broadcast. Entries of any other SparkContext are
+    dropped, so the caches hold one context's UDFs and broadcasts."""
     app_id = sc.applicationId
     digest = hashlib.sha256(pickle.dumps(pattern_list)).hexdigest()
     key = (app_id, digest, include_tokens, text_of)
     if key in _UDFS:
         return _UDFS[key]
-    for stale in [k for k in _UDFS if k[0] != app_id]:
-        del _UDFS[stale]
-    broadcast_patterns = sc.broadcast(pattern_list)
+    for cache in (_UDFS, _BROADCASTS):
+        for stale in [k for k in cache if k[0] != app_id]:
+            del cache[stale]
+    broadcast_patterns = _BROADCASTS.get((app_id, digest))
+    if broadcast_patterns is None:
+        broadcast_patterns = _BROADCASTS[(app_id, digest)] = sc.broadcast(
+            pattern_list)
     arrow_type = to_arrow_type(EXTRACTION_TYPE)
 
     @F.arrow_udf(EXTRACTION_TYPE)
@@ -154,13 +162,13 @@ def _extract(turns: DataFrame, patterns: Optional[list],
     The UDF is an Arrow scalar-iterator UDF: each batch arrives as a
     ``pyarrow`` string array and leaves as one struct array built with
     ``pa.array``, with no pandas conversion either way. It is made once
-    per session and argument set (see ``_extraction_udf``), so repeated
-    calls share one pattern broadcast, and each Python worker builds the
-    trie once. ``text_of`` maps each input value to the text the kernel
-    reads (the web path passes its main-content strip). The cheap
-    null/empty filter runs JVM-side before any Python is invoked; a text
-    that only turns out empty in Python comes back with null spans and is
-    dropped after the UDF."""
+    per session and argument set (see ``_extraction_udf``), every call
+    with the same patterns shares one pattern broadcast, and each Python
+    worker builds the trie once. ``text_of`` maps each input value to the
+    text the kernel reads (the web path passes its main-content strip).
+    The cheap null/empty filter runs JVM-side before any Python is
+    invoked; a text that only turns out empty in Python comes back with
+    null spans and is dropped after the UDF."""
     pattern_list = patterns if patterns is not None else load_full_patterns()
     extract_udf = _extraction_udf(turns.sparkSession.sparkContext,
                                   pattern_list, include_tokens, text_of)

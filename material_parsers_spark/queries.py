@@ -15,7 +15,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Dict
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 SPARK_QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -800,8 +800,8 @@ def _minhash_bands_exploded(docs: DataFrame) -> DataFrame:
     # skew tail (a hot conversation's ~10^5 shingles) spreads across the
     # cluster instead of serializing on the hot docs' tasks
     exploded = (
-        _shingles_df(docs)
-        .select("doc_id", F.explode("shingles").alias("sh"))
+        _ngrams_df(docs, 3)
+        .select("doc_id", F.explode("ngrams").alias("sh"))
         .repartition(4 * spark.sparkContext.defaultParallelism)
     )
     mins = exploded.groupBy("doc_id").agg(*[
@@ -2254,11 +2254,76 @@ _SHINGLES_SQL = """
 """
 
 
-def _shingles_df(docs: DataFrame) -> DataFrame:
-    """3-gram shingles: _ngrams_df with the column name every dedup
-    query and oracle expects (identical construction, so shingle order
-    and array_distinct first-occurrence semantics are unchanged)."""
-    return _ngrams_df(docs, 3).withColumnRenamed("ngrams", "shingles")
+def _materialize(frame: DataFrame, **cols: Column) -> DataFrame:
+    """(doc_id, *cols): each keyword becomes a column holding that
+    expression, computed once per row behind a Generate barrier.
+
+    The barrier is a one-element ``explode(array(struct(...)))``.
+    Catalyst neither collapses a Project into a Generate node nor pushes
+    a filter on the generated column below it, so every later reference
+    reads the materialized attribute. A plain projection gives neither
+    guarantee: CollapseProject may inline the expression into a
+    higher-order-function lambda, which evaluates INTERPRETED per
+    element (``split(text)`` inside a per-gram lambda re-splits the
+    whole text per gram, O(words^2): minutes for one ~1 MB rendered hot
+    conversation, seen in jstack as StringSplit.nullSafeEval inside
+    ConcatWs.eval), and the ``size(...) > 0`` filter that
+    InferFiltersFromGenerate derives for a downstream explode is pushed
+    below an upstream Exchange with the expression cloned into it, so
+    the whole gram build runs twice, the second time in the unspread
+    scan stage."""
+    return (frame.select("doc_id", F.explode(F.array(F.struct(
+                *[c.alias(name) for name, c in cols.items()]))).alias("m"))
+            .select("doc_id",
+                    *[F.col(f"m.{name}").alias(name) for name in cols]))
+
+
+def _doubling_ladder(frame: DataFrame, n: int, channels: tuple,
+                     combine: Callable) -> tuple:
+    """(frame, grams): the n-grams of one or more unit arrays in
+    O(log n) zip_with steps.
+
+    For each prefix p in ``channels``, ``frame`` holds the width-1 unit
+    array ``{p}1`` (words, or word hashes); every channel has one unit
+    per word. ``combine(w)`` gives one two-argument function per channel
+    that appends a gram of w units to the gram on its left. The ladder
+    builds level 2w from level w (gram i of width 2w appends gram i+w to
+    gram i) for every power of two up to n, each level materialized
+    (``_materialize``) so its two slice references read an attribute
+    instead of re-evaluating the lower levels. It then composes the
+    n-grams from the binary decomposition of n, largest width first.
+    The result equals the linear chain of n-1 appends whenever appending
+    is associative: string concatenation, and the modular polynomial
+    fold by the mod homomorphism. ``grams`` holds one array per channel,
+    of size - n + 1 grams (none when a row is shorter than n)."""
+    size = F.size(F.col(f"{channels[0]}1"))
+    widths = [1]
+    while 2 * widths[-1] <= n:
+        half = widths[-1]
+        m = F.greatest(size - (2 * half - 1), F.lit(0))
+        new = {f"{p}{2 * half}": F.zip_with(
+                   F.slice(F.col(f"{p}{half}"), 1, m),
+                   F.slice(F.col(f"{p}{half}"), 1 + half, m), append)
+               for p, append in zip(channels, combine(half))}
+        keep = {f"{p}{w}": F.col(f"{p}{w}") for w in widths for p in channels}
+        frame = _materialize(frame, **keep, **new)
+        widths.append(2 * half)
+
+    cnt = F.greatest(size - (n - 1), F.lit(0))
+    grams, offset = None, 0
+    for w in reversed(widths):
+        if w <= n - offset:
+            part = [F.slice(F.col(f"{p}{w}"), 1 + offset, cnt)
+                    for p in channels]
+            grams = part if grams is None else [
+                F.zip_with(g, s, append)
+                for g, s, append in zip(grams, part, combine(w))]
+            offset += w
+    return frame, grams
+
+
+def _join_words(a: Column, b: Column) -> Column:
+    return F.concat_ws(" ", a, b)
 
 
 def _ngrams_df(docs: DataFrame, n: int, distinct: bool = True) -> DataFrame:
@@ -2267,88 +2332,30 @@ def _ngrams_df(docs: DataFrame, n: int, distinct: bool = True) -> DataFrame:
     position, so ``posexplode`` yields (start position, gram) pairs for
     span-level consumers.
 
-    CRITICAL SHAPE: no lambda may reference the `words` column. Binding
-    the split as a named column is NOT enough — CollapseProject inlines
-    `split(text)` into higher-order-function lambdas, and HOF lambda
-    bodies evaluate INTERPRETED per element, so `element_at(words, i)`
-    inside a transform re-splits the whole text per n-gram: O(words^2),
-    minutes for ONE ~1 MB rendered hot conversation (proven by jstack:
-    StringSplit.nullSafeEval inside ConcatWs.eval). zip_with over n
-    shifted slices keeps every lambda argument-bound — the split is
-    evaluated a constant number of times per ROW regardless of what
-    Catalyst collapses.
-
-    r6 optimization (guide §1.2 per-task work): for n > 3 the linear
-    chain of n-1 zip_with steps (which copies O(n^2) chars per gram
-    through interpreted lambdas) is replaced by DOUBLING — build
-    2,4,8..-gram arrays and compose the n-gram from the binary
-    decomposition of n, O(log n) zip_with steps and O(n log n) chars.
-    Each doubling level is materialized behind a one-element explode
-    (a Generate barrier, the established CollapseProject fence — see
-    _rk_gram_occ) so the two slice references per level read a
-    materialized attribute instead of re-evaluating the whole lower
-    level twice. The produced gram strings are byte-identical
-    (string concatenation is associative), so every oracle and golden
-    downstream is unchanged."""
-    words = F.col("words")
-    # greatest-0 guard: Catalyst may evaluate the slice projection for
-    # rows the >= n filter later drops (negative lengths throw)
-    cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
-    base = (docs.select("doc_id", F.split("text", " ").alias("words"))
+    CRITICAL SHAPE: no lambda may reference the split of the text. The
+    words are passed to the lambdas as zip_with arguments over shifted
+    slices, so the split is evaluated a constant number of times per row
+    whatever Catalyst collapses. For n <= 3 the grams are a linear chain
+    of n-1 appends; above that ``_doubling_ladder`` builds them in
+    O(log n) steps and O(n log n) copied characters instead of O(n^2).
+    Both give byte-identical gram strings. The gram array is
+    materialized (``_materialize``), so a consumer's explode or second
+    reference does not clone the build."""
+    words = F.col("g1")
+    base = (docs.select("doc_id", F.split("text", " ").alias("g1"))
             .where(F.size(words) >= n))
-    def _sealed(frame_, out_):
-        # final Generate barrier: the gram array is MATERIALIZED, so a
-        # consumer's explode-inferred size() > 0 filter (or any second
-        # reference) reads the attribute instead of letting pushdown
-        # clone the whole gram build below an upstream Exchange
-        return (frame_.select("doc_id", F.explode(F.array(F.struct(
-                    out_.alias("ngrams")))).alias("zf"))
-                .select("doc_id", F.col("zf.ngrams").alias("ngrams")))
-
     if n <= 3:
+        # greatest-0 guard: Catalyst may evaluate the slice projection
+        # for rows the >= n filter later drops (negative lengths throw)
+        cnt = F.greatest(F.size(words) - (n - 1), F.lit(0))
         acc = F.slice(words, 1, cnt)
         for k in range(2, n + 1):
-            acc = F.zip_with(acc, F.slice(words, k, cnt),
-                             lambda a, b: F.concat_ws(" ", a, b))
-        out = F.array_distinct(acc) if distinct else acc
-        return _sealed(base, out)
-
-    # doubling path: levels maps gram-width -> materialized column name
-    frame = base
-    levels = {1: "words"}
-    width = 2
-    while width <= n:
-        half = levels[width // 2]
-        m = F.greatest(F.size(words) - (width - 1), F.lit(0))
-        g = F.zip_with(F.slice(F.col(half), 1, m),
-                       F.slice(F.col(half), 1 + width // 2, m),
-                       lambda a, b: F.concat_ws(" ", a, b))
-        name = f"g{width}"
-        keep = [levels[s] for s in levels]
-        frame = (frame.select(
-            "doc_id",
-            F.explode(F.array(F.struct(
-                *[F.col(c).alias(c) for c in keep],
-                g.alias(name)))).alias("z"))
-            .select("doc_id",
-                    *[F.col(f"z.{c}").alias(c) for c in keep],
-                    F.col(f"z.{name}").alias(name)))
-        levels[width] = name
-        width *= 2
-
-    # compose n from its binary decomposition, largest width first
-    parts, offset, remaining = [], 0, n
-    for w_ in sorted(levels, reverse=True):
-        while w_ <= remaining:
-            parts.append((levels[w_], offset))
-            offset += w_
-            remaining -= w_
-    acc = F.slice(F.col(parts[0][0]), 1 + parts[0][1], cnt)
-    for name, off in parts[1:]:
-        acc = F.zip_with(acc, F.slice(F.col(name), 1 + off, cnt),
-                         lambda a, b: F.concat_ws(" ", a, b))
-    out = F.array_distinct(acc) if distinct else acc
-    return _sealed(frame, out)
+            acc = F.zip_with(acc, F.slice(words, k, cnt), _join_words)
+    else:
+        base, (acc,) = _doubling_ladder(base, n, ("g",),
+                                        lambda w: [_join_words])
+    return _materialize(base, ngrams=F.array_distinct(acc) if distinct
+                        else acc)
 
 
 def _minhash_bands(docs: DataFrame) -> DataFrame:
@@ -2364,12 +2371,12 @@ def _minhash_bands(docs: DataFrame) -> DataFrame:
     # RAW docs across the cluster first (r6: repartition below the
     # shingle build shuffled the ~3x-amplified shingle arrays; moving
     # it to the text rows shuffles a third of the bytes, guide §2.3)
-    shingled = _shingles_df(docs.repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"))
+    shingled = _ngrams_df(docs.repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"), 3)
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(7)),
         lambda s: F.array_min(F.transform(
-            F.col("shingles"),
+            F.col("ngrams"),
             lambda x: F.conv(
                 F.substring(F.md5(F.concat(x, F.lit(":"), s.cast("string"))),
                             1, 15), 16, 10).cast("long"))),
@@ -2682,7 +2689,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise-similarity surface."""
     docs = _read(spark, sf_dir, "documents")
     parallelism = spark.sparkContext.defaultParallelism
-    shingled = _shingles_df(docs).join(
+    shingled = _ngrams_df(docs, 3).join(
         docs.select("doc_id", "lang",
                     (F.col("n_chars") / 64).cast("long").alias("len_bucket")),
         "doc_id").repartition(parallelism, "doc_id")
@@ -2711,9 +2718,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(parallelism, "doc_a", "doc_b")
     )
     a = shingled.select(F.col("doc_id").alias("doc_a"),
-                        F.col("shingles").alias("shingles_a"))
+                        F.col("ngrams").alias("shingles_a"))
     b = shingled.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingles").alias("shingles_b"))
+                        F.col("ngrams").alias("shingles_b"))
     jaccard = F.round(
         F.size(F.array_intersect("shingles_a", "shingles_b")).cast("double")
         / F.size(F.array_distinct(F.concat("shingles_a", "shingles_b"))), 6)
@@ -2769,26 +2776,19 @@ def _winnowed_fp_arrays(docs: DataFrame) -> DataFrame:
     the per-doc fingerprint COUNT can read size(fps) off the same
     single md5 sweep instead of re-running it.
 
-    r6 CRITICAL SHAPE: `words` and `hashes` are each materialized
-    behind a one-element explode (Generate barrier, the
-    _rk_gram_occ/_ngrams_df fence). Without them, (a) CollapseProject
-    inlines the split into the per-gram md5 lambda — one full
-    re-split per gram, O(words^2) — and (b) InferFiltersFromGenerate
-    derives a size(fps) > 0 filter for the downstream explode and
-    filter pushdown CLONES the whole inlined winnow expression below
-    the repartition Exchange, where the min-window's four
-    element_at(transform(...)) references re-evaluate the entire
-    hashes sweep per fps element: O(words^3) per document, running in
-    the unspread pre-exchange scan stage (measured: the round-start
-    70 s / sf1 for dedup_containment was mostly THIS filter)."""
+    CRITICAL SHAPE: `words` and `hashes` are each materialized
+    (``_materialize``), so the split cannot be inlined into the per-gram
+    md5 lambda, and the downstream explode's size(fps) > 0 filter cannot
+    clone the winnow below the repartition Exchange, where the
+    min-window's four element_at(transform(...)) references would
+    re-evaluate the whole hashes sweep per fps element: O(words^3) per
+    document (most of the 70 s that dedup_containment once took at
+    sf1)."""
     words = F.col("words")
-    base = (
+    base = _materialize(
         docs.select("doc_id", F.split("text", " ").alias("words"))
-        .where(F.size("words") >= 5)
-        .select("doc_id", F.explode(F.array(F.struct(
-            F.col("words").alias("words")))).alias("zw"))
-        .select("doc_id", F.col("zw.words").alias("words"))
-    )
+        .where(F.size("words") >= 5),
+        words=words)
     # rolling-hash array via a transform over gram start indexes;
     # `words` is a materialized attribute here, so element_at is O(1)
     hashes = F.transform(
@@ -2798,15 +2798,11 @@ def _winnowed_fp_arrays(docs: DataFrame) -> DataFrame:
             F.element_at(words, i + 2), F.element_at(words, i + 3),
             F.element_at(words, i + 4))), 1, 15), 16, 10).cast("long"),
     )
-    grams = (
-        # barrier FIRST, filter on the materialized attribute after —
-        # filtering on the projection alias would let pushdown clone
-        # the md5 sweep into a second below-barrier evaluation
-        base.select("doc_id", F.explode(F.array(F.struct(
-            hashes.alias("hashes")))).alias("zh"))
-        .select("doc_id", F.col("zh.hashes").alias("hashes"))
-        .where(F.size("hashes") >= 4)
-    )
+    # barrier FIRST, filter on the materialized attribute after —
+    # filtering on the projection alias would let pushdown clone the md5
+    # sweep into a second below-barrier evaluation
+    grams = (_materialize(base, hashes=hashes)
+             .where(F.size("hashes") >= 4))
     fps = F.array_distinct(F.transform(
         F.sequence(F.lit(0), F.size("hashes") - 4),
         lambda i: F.least(
@@ -3270,18 +3266,11 @@ def bloom_decon_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = (_ngrams_df(docs.where(~is_eval)
                          .repartition(parallelism, "doc_id"), 13)
               .where(F.size("ngrams") > 0))
-    # survivors materialize behind a Generate barrier: the final
-    # projection reads them twice (count + explode), and without the
-    # barrier CollapseProject would inline the 4-probe filter into
-    # both references — every gram probed twice (r6, guide §1.2)
-    probed = (corpus.select(
-        "doc_id",
-        F.explode(F.array(F.struct(
-            F.size("ngrams").cast("long").alias("n_grams"),
-            F.filter("ngrams", bloom_hit).alias("survivors"),
-        ))).alias("zp"))
-        .select("doc_id", F.col("zp.n_grams").alias("n_grams"),
-                F.col("zp.survivors").alias("survivors")))
+    # the final projection reads the survivors twice (count +
+    # explode); materialized, every gram is probed once
+    probed = _materialize(
+        corpus, n_grams=F.size("ngrams").cast("long"),
+        survivors=F.filter("ngrams", bloom_hit))
     marked = ev_grams.select("gram", F.lit(1).alias("m"))
     return (probed.select(
         "doc_id", "n_grams",
@@ -3586,91 +3575,37 @@ def _rk_word_channels(words_col):
     return wa, wb
 
 
+def _rk_append(base: int, width: int) -> Callable:
+    """Append the hash y of a ``width``-word gram to the hash x on its
+    left, in the channel with this ``base``: (x * base^width + y) mod M."""
+    p = pow(base, width, _RK_M)
+    return lambda x, y: (x * p + y) % _RK_M
+
+
 def _rk_gram_occ(docs: DataFrame, n: int) -> DataFrame:
     """(doc_id, pos, gram_h) positional rolling-hash n-gram stream.
-    The word-hash projection sits behind a single-element explode —
-    a Generate node Catalyst cannot collapse a downstream Project
-    into — so each word is md5-hashed exactly twice per document
-    (once per channel), not 2n times.
-
-    r6 optimization (guide §1.2): the per-channel polynomial fold used
-    to chain n-1 interpreted zip_with steps; it now DOUBLES —
-    h_{2k}(i) = (h_k(i) * B^k + h_k(i+k)) mod M, composing n from its
-    binary decomposition — O(log n) steps, each level materialized
-    behind a Generate barrier (same fence as _ngrams_df). Modular
-    int64 arithmetic is exact, so the residues are identical to the
-    linear chain (and to the oracle's unrolled fold) by the mod
-    homomorphism; intermediates stay < 2^62."""
+    The word-hash channels are materialized (``_materialize``), so each
+    word is md5-hashed exactly twice per document (once per channel),
+    not 2n times. Each channel's polynomial fold,
+    h_{2k}(i) = (h_k(i) * B^k + h_k(i+k)) mod M, runs on
+    ``_doubling_ladder``. Modular int64 arithmetic is exact, so the
+    residues equal the oracle's unrolled fold; intermediates stay
+    < 2^62."""
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     w = F.split("text", " ")
     wa, wb = _rk_word_channels(w)
-    frame = (
-        docs.where(F.size(w) >= n)
-        .repartition(parallelism, "doc_id")
-        .select("doc_id", F.explode(F.array(F.struct(
-            wa.alias("a1"), wb.alias("b1")))).alias("z"))
-        .select("doc_id", F.col("z.a1").alias("a1"),
-                F.col("z.b1").alias("b1"))
-    )
-    levels = {1: ("a1", "b1")}
-    width = 2
-    while width <= n:
-        half = width // 2
-        ah, bh = levels[half]
-        p1 = pow(_RK_B1, half, _RK_M)
-        p2 = pow(_RK_B2, half, _RK_M)
-        m = F.greatest(F.size(F.col("a1")) - (width - 1), F.lit(0))
-        ga = F.zip_with(F.slice(F.col(ah), 1, m),
-                        F.slice(F.col(ah), 1 + half, m),
-                        lambda x, y: (x * p1 + y) % _RK_M)
-        gb = F.zip_with(F.slice(F.col(bh), 1, m),
-                        F.slice(F.col(bh), 1 + half, m),
-                        lambda x, y: (x * p2 + y) % _RK_M)
-        na, nb = f"a{width}", f"b{width}"
-        keep = [c for pair in levels.values() for c in pair]
-        frame = (frame.select(
-            "doc_id", F.explode(F.array(F.struct(
-                *[F.col(c).alias(c) for c in keep],
-                ga.alias(na), gb.alias(nb)))).alias("z"))
-            .select("doc_id",
-                    *[F.col(f"z.{c}").alias(c) for c in keep],
-                    F.col(f"z.{na}").alias(na),
-                    F.col(f"z.{nb}").alias(nb)))
-        levels[width] = (na, nb)
-        width *= 2
-
-    parts, offset, remaining = [], 0, n
-    for w_ in sorted(levels, reverse=True):
-        while w_ <= remaining:
-            parts.append((w_, offset))
-            offset += w_
-            remaining -= w_
-    cnt = F.greatest(F.size(F.col("a1")) - (n - 1), F.lit(0))
-    (w0, off0) = parts[0]
-    acc_a = F.slice(F.col(levels[w0][0]), 1 + off0, cnt)
-    acc_b = F.slice(F.col(levels[w0][1]), 1 + off0, cnt)
-    def _combine(p):
-        # factory so the lambda keeps exactly two parameters (PySpark
-        # derives the HOF arity from the signature)
-        return lambda x, y: (x * p + y) % _RK_M
-
-    for w_, off in parts[1:]:
-        p1 = pow(_RK_B1, w_, _RK_M)
-        p2 = pow(_RK_B2, w_, _RK_M)
-        acc_a = F.zip_with(acc_a, F.slice(F.col(levels[w_][0]),
-                                          1 + off, cnt),
-                           _combine(p1))
-        acc_b = F.zip_with(acc_b, F.slice(F.col(levels[w_][1]),
-                                          1 + off, cnt),
-                           _combine(p2))
-    grams = F.zip_with(acc_a, acc_b,
+    frame = _materialize(
+        docs.where(F.size(w) >= n).repartition(parallelism, "doc_id"),
+        a1=wa, b1=wb)
+    frame, (grams_a, grams_b) = _doubling_ladder(
+        frame, n, ("a", "b"),
+        lambda width: [_rk_append(_RK_B1, width),
+                       _rk_append(_RK_B2, width)])
+    grams = F.zip_with(grams_a, grams_b,
                        lambda a, b: a * (_RK_M + 1) + b)
-    # final barrier: the posexplode's inferred size() filter and the
-    # pos/gram projection read a materialized array
-    sealed = (frame.select("doc_id", F.explode(F.array(F.struct(
-                  grams.alias("grams")))).alias("zf"))
-              .select("doc_id", F.col("zf.grams").alias("grams")))
-    return sealed.select(
+    # the posexplode's inferred size() filter and the pos/gram
+    # projection read the materialized array
+    return _materialize(frame, grams=grams).select(
         "doc_id", F.posexplode("grams").alias("pos", "gram_h"))
 
 

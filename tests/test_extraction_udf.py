@@ -1,5 +1,5 @@
 """The extraction UDF's session cache and per-batch dedup: one pattern
-broadcast per session and argument set, and rows equal to the Spark-free
+broadcast per session and pattern set, and rows equal to the Spark-free
 kernel's whether a text is repeated, empty or null, on the direct and the
 web path."""
 
@@ -88,13 +88,20 @@ def _assert_rows_match_kernel(rows, kernel_texts, matcher, include_tokens):
         assert _as_plain(row) == json.loads(json.dumps(expected)), i
 
 
+def _direct(include_tokens):
+    return lambda turns, patterns: extract_ordered(
+        turns, patterns=patterns, include_tokens=include_tokens)
+
+
+def _web(turns, patterns):
+    return extract_materials_from_html(wrap_turns_in_html(turns),
+                                       patterns=patterns)
+
+
 def test_repeated_calls_make_one_pattern_broadcast(spark, monkeypatch):
-    """Three ``extract_ordered`` calls with the same patterns in one
-    session broadcast the patterns once, and all three still extract."""
-    # a pattern set no other test uses, so the first call here is the
-    # session's first for it
-    patterns = build_default_patterns() + crystal_structure_patterns(
-        ["Zr Qx"])
+    """Three extraction calls with the same patterns in one session
+    broadcast the patterns once, whatever their other arguments, and all
+    three still extract."""
     broadcasts = []
     original = SparkContext.broadcast
 
@@ -104,10 +111,19 @@ def test_repeated_calls_make_one_pattern_broadcast(spark, monkeypatch):
 
     monkeypatch.setattr(SparkContext, "broadcast", counting)
     turns = _frame(spark, TEXTS)
-    counts = [extract_ordered(turns, patterns=patterns).count()
-              for _ in range(3)]
-    assert counts == [len(TEXTS)] * 3
-    assert len(broadcasts) == 1
+    for marker, calls in [
+        ("Zr Qx", [_direct(True)] * 3),
+        # the direct path with and without tokens, then the web path
+        ("Zr Qy", [_direct(True), _direct(False), _web]),
+    ]:
+        # a pattern set no other test uses, so the first call here is
+        # the session's first for it
+        patterns = build_default_patterns() + crystal_structure_patterns(
+            [marker])
+        broadcasts.clear()
+        counts = [call(turns, patterns).count() for call in calls]
+        assert counts == [len(TEXTS)] * 3, marker
+        assert len(broadcasts) == 1, marker
 
 
 @pytest.mark.parametrize("include_tokens", [True, False])
