@@ -9,15 +9,31 @@ based and must match the reference's golden values digit-for-digit
 (`tests/test_relationship_resolver.py:425-468`: 7.5, 18, 27.0, 23.5) —
 including the reference's unparenthesized ``abs(pivot - start_idx + L/2)``
 distance for parenthesis-wrapped values.
+
+Cost over a doc of n characters with M materials and T Tc values:
+``calculate_distances`` is O(n + M·T). Each tc's neighbour materials,
+parenthesis window and anchor are found once (O(M) plus the window), and
+each (material, tc) pair's separator test is one lookup in an O(n)
+"nearest separator end from here" index. The greedy assignment in
+``vicinity_resolution`` is O(M·T): ``assigned`` is a set, and
+``MergedToken`` hashes by identity, so a lookup calls no dataclass
+``__eq__``.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Tuple
+import math
+import re
+from itertools import accumulate
+from typing import Dict, List, Optional, Set, Tuple
 
 from .doc import MergedDoc, MergedToken
 
 SEPARATORS = [",", ".", ";", "and", "but", "while", "whereas", "which", "although"]
+# every start of a separator occurrence, overlapping ones included; the
+# shortest separator that matches at a start comes first
+_SEPARATOR_STARTS = re.compile("(?=(%s))" % "|".join(
+    re.escape(sep) for sep in sorted(SEPARATORS, key=len)))
 
 OPENING_PARENTHESIS = ["(", "[", "{"]
 CLOSING_PARENTHESIS = [")", "]", "}"]
@@ -88,6 +104,17 @@ def find_following_entity(pivot: MergedToken, items: List[MergedToken],
     return find_closer_to_pivot(pivot, after)
 
 
+def _separator_ends(text: str) -> List[float]:
+    """For each position p of ``text`` (and one past its end), the smallest
+    end of a ``SEPARATORS`` occurrence that starts at or after p, or
+    infinity. ``text[s:e]`` holds a separator iff ``ends[s] <= e``, with
+    the substring semantics of ``sep in chunk`` ("and" matches in "band")."""
+    ends: List[float] = [math.inf] * (len(text) + 1)
+    for match in _SEPARATOR_STARTS.finditer(text):
+        ends[match.start()] = match.start() + len(match.group(1))
+    return list(accumulate(reversed(ends), min))[::-1]
+
+
 def calculate_distances(materials: List[MergedToken],
                         tc_values: List[MergedToken],
                         doc: MergedDoc) -> Dict[MergedToken, Dict[MergedToken, float]]:
@@ -97,59 +124,68 @@ def calculate_distances(materials: List[MergedToken],
     materials, measure to the opening parenthesis plus half the wrapped text
     (reference's exact — unparenthesized — arithmetic);
     (b) x2 penalty when a separator occurs in the chunk between the pair.
-    """
-    mapping: Dict[MergedToken, Dict[MergedToken, float]] = {}
 
+    Each tc's neighbour materials, parenthesis window and anchor are
+    computed once, and each pair's separator test is one lookup in
+    ``_separator_ends``.
+    """
+    separator_ends = _separator_ends(doc.text)
+
+    def has_separator(start: int, end: int) -> bool:
+        """Whether ``doc.slice_text(start, end)`` holds a separator."""
+        if start >= end:
+            return False
+        last = doc[end - 1]
+        return separator_ends[doc[start].idx] <= last.idx + len(last.text)
+
+    # per tc: the chunk bounds (the opening parenthesis or the tc, the
+    # token after the closing parenthesis or after the tc) and the
+    # distance terms: abs(pivot_centroid - offset + half)
+    anchors = []
+    for tc_value in tc_values:
+        previous_material = find_previous_entity(tc_value, materials)
+        following_material = find_following_entity(tc_value, materials)
+        previous_index = previous_material.i if previous_material is not None else -1
+        following_index = following_material.i if following_material is not None else len(doc)
+
+        before_text = doc.slice_text(previous_index + 1, tc_value.i)
+        after_text = doc.slice_text(tc_value.i + 1, following_index)
+        opened = [p for p in OPENING_PARENTHESIS if p in before_text]
+        closed = [p for p in CLOSING_PARENTHESIS if p in after_text]
+        matched = [
+            o for o in opened
+            if CLOSING_PARENTHESIS[OPENING_PARENTHESIS.index(o)] in closed
+        ]
+
+        # a parenthesis inside a merged entity token is no standalone
+        # token: without one on each side, measure unparenthesized
+        openings = [t for t in doc[previous_index + 1: tc_value.i]
+                    if str(t) in OPENING_PARENTHESIS] if matched else []
+        closings = [t for t in doc[tc_value.i + 1: following_index]
+                    if str(t) in CLOSING_PARENTHESIS] if matched else []
+
+        if openings and closings:
+            starting, ending = openings[0], closings[-1]
+            wrapped_len = len(doc.slice_text(starting.i, ending.i))
+            anchors.append((starting.i, ending.i + 1, starting.idx,
+                            wrapped_len / 2))
+        else:
+            # x + 0 == x exactly, so this is abs(pivot - centroid)
+            anchors.append((tc_value.i, tc_value.i + 1, _centroid(tc_value),
+                            0))
+
+    mapping: Dict[MergedToken, Dict[MergedToken, float]] = {}
     for material in materials:
         pivot_centroid = _centroid(material)
         tc_distances: Dict[MergedToken, float] = {}
-
-        for tc_value in tc_values:
-            previous_material = find_previous_entity(tc_value, materials)
-            following_material = find_following_entity(tc_value, materials)
-            previous_index = previous_material.i if previous_material is not None else -1
-            following_index = following_material.i if following_material is not None else len(doc)
-
-            before_text = doc.slice_text(previous_index + 1, tc_value.i)
-            after_text = doc.slice_text(tc_value.i + 1, following_index)
-            opened = [p for p in OPENING_PARENTHESIS if p in before_text]
-            closed = [p for p in CLOSING_PARENTHESIS if p in after_text]
-            matched = [
-                o for o in opened
-                if CLOSING_PARENTHESIS[OPENING_PARENTHESIS.index(o)] in closed
-            ]
-
-            # a parenthesis inside a merged entity token is no standalone
-            # token: without one on each side, measure unparenthesized
-            openings = [t for t in doc[previous_index + 1: tc_value.i]
-                        if str(t) in OPENING_PARENTHESIS] if matched else []
-            closings = [t for t in doc[tc_value.i + 1: following_index]
-                        if str(t) in CLOSING_PARENTHESIS] if matched else []
-
-            if openings and closings:
-                starting, ending = openings[0], closings[-1]
-                wrapped_len = len(doc.slice_text(starting.i, ending.i))
-                tc_distances[tc_value] = abs(
-                    pivot_centroid - starting.idx + wrapped_len / 2
-                )
-                if material.i < tc_value.i:
-                    chunk = doc.slice_text(material.i + 1, starting.i) \
-                        if material.i + 1 < starting.i else ""
-                else:
-                    chunk = doc.slice_text(ending.i + 1, material.i) \
-                        if ending.i + 1 < material.i else ""
+        for tc_value, (left, right, offset, half) in zip(tc_values, anchors):
+            distance = abs(pivot_centroid - offset + half)
+            if material.i < tc_value.i:
+                separated = has_separator(material.i + 1, left)
             else:
-                tc_distances[tc_value] = abs(pivot_centroid - _centroid(tc_value))
-                if material.i < tc_value.i:
-                    chunk = doc.slice_text(material.i + 1, tc_value.i) \
-                        if material.i + 1 < tc_value.i else ""
-                else:
-                    chunk = doc.slice_text(tc_value.i + 1, material.i) \
-                        if tc_value.i + 1 < material.i else ""
-
-            if any(sep in chunk for sep in SEPARATORS):
-                tc_distances[tc_value] *= 2
-
+                separated = has_separator(right, material.i)
+            tc_distances[tc_value] = distance * 2 if separated else distance
+        if tc_values:
             mapping[material] = tc_distances
 
     return mapping
@@ -158,7 +194,7 @@ def calculate_distances(materials: List[MergedToken],
 def assign_relationship_in_order(entities1: List[MergedToken],
                                  entities2: List[MergedToken]) -> List[tuple]:
     """J5: per-entity1 nearest unassigned entity2 by centroid distance."""
-    assigned: List[MergedToken] = []
+    assigned: Set[MergedToken] = set()
     relationships: List[tuple] = []
 
     if not entities1 or not entities2:
@@ -179,8 +215,7 @@ def assign_relationship_in_order(entities1: List[MergedToken],
         while i < len(sorted_values) - 1 and sorted_values[i] in assigned:
             i += 1
         if sorted_values[i] not in assigned:
-            assigned.append(sorted_values[i])
-            assigned.append(material)
+            assigned.update((sorted_values[i], material))
             relationships.append(link_spans(material, sorted_values[i], "vicinity"))
 
     return relationships
@@ -233,7 +268,7 @@ def vicinity_resolution(doc: MergedDoc,
                 relationships.extend(assign_in_order(reduced1, reduced2))
                 previous_index = resp.i
     else:
-        assigned: List[MergedToken] = []
+        assigned: Set[MergedToken] = set()
         material_tc = calculate_distances(destination_entities, source_entities, doc)
 
         tc_material: Dict[MergedToken, Dict[MergedToken, float]] = {}
@@ -248,7 +283,7 @@ def vicinity_resolution(doc: MergedDoc,
                 tc = min(candidates, key=candidates.get)
                 if material not in assigned and tc not in assigned:
                     relationships.append(link_spans(material, tc, "distance"))
-                    assigned.extend((material, tc))
+                    assigned.update((material, tc))
         else:
             for tc, distances in tc_material.items():
                 candidates = {m: d for m, d in distances.items()
@@ -256,6 +291,6 @@ def vicinity_resolution(doc: MergedDoc,
                 material = min(candidates, key=candidates.get)
                 if material not in assigned and tc not in assigned:
                     relationships.append(link_spans(material, tc, "distance"))
-                    assigned.extend((material, tc))
+                    assigned.update((material, tc))
 
     return relationships

@@ -39,18 +39,19 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
     if not temps:
         return doc
 
-    tc_expressions = [t for t in doc if t.ent_type in TC_TYPES]
+    tc_texts = {t.text for t in doc if t.ent_type in TC_TYPES}
 
-    marked_as_tc = []
-    marked_as_non_tc = []
+    # MergedToken hashes by identity: these sets never call __eq__
+    marked_as_tc = set()
+    marked_as_non_tc = set()
 
     if "respectively" in str(doc):
         # rule 1: with a tc expression present, every temp before the last
         # "respectively" is linkable
-        if tc_expressions:
+        if tc_texts:
             respectively = [t for t in doc if str(t) == "respectively"]
             last = respectively[-1]
-            marked_as_tc.extend(t for t in temps if last.i > t.i)
+            marked_as_tc.update(t for t in temps if last.i > t.i)
     else:
         for index_t, temp in enumerate(temps):
             if temp in marked_as_tc:
@@ -63,7 +64,7 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
             # rule 3: reject when followed by "higher"/"lower"
             for expr in NON_TC_EXPRESSIONS_AFTER:
                 if temp.i + 1 < len(doc) and doc[temp.i + 1].text.lower() == expr:
-                    marked_as_non_tc.append(temp)
+                    marked_as_non_tc.add(temp)
                     break
             if temp in marked_as_non_tc:
                 continue
@@ -72,7 +73,7 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
             for expr in NON_TC_EXPRESSIONS_BEFORE:
                 width = len(expr.split(" "))
                 if temp.i - width >= 0 and doc.slice_text(temp.i - width, temp.i) == expr:
-                    marked_as_non_tc.append(temp)
+                    marked_as_non_tc.add(temp)
                     break
             if temp in marked_as_non_tc:
                 continue
@@ -83,32 +84,22 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
                 width = len(expr.split(" "))
                 if temp.i - width >= 0 and \
                         doc.slice_text(temp.i - width, temp.i).lower() == expr:
-                    marked_as_tc.append(temp)
+                    marked_as_tc.add(temp)
                     break
                 if temp.i - width - 1 >= 0 and \
                         doc.slice_text(temp.i - width - 1, temp.i - 1).lower() == expr:
-                    marked_as_tc.append(temp)
+                    marked_as_tc.add(temp)
                     break
             if temp in marked_as_tc:
                 continue
 
             # rule 6: accept when an extracted <tc> entity text occurs
-            # between the previous temp and this temp (backward scan)
-            for tc in tc_expressions:
-                expression_length = 1
-                start = temp.i
-                previous_temp_index = temps[index_t - 1].i if index_t > 0 else 0
-                index = start - expression_length
-                matched = False
-                while index >= max(0, previous_temp_index):
-                    if doc.slice_text(index, start) == tc.text:
-                        marked_as_tc.append(temp)
-                        matched = True
-                        break
-                    start -= 1
-                    index = start - expression_length
-                if matched:
-                    break
+            # between the previous temp and this temp (backward scan);
+            # the scanned slices are single tokens, so compare token texts
+            previous_temp_index = temps[index_t - 1].i if index_t > 0 else 0
+            if any(doc[index].text in tc_texts
+                   for index in range(temp.i - 1, previous_temp_index - 1, -1)):
+                marked_as_tc.add(temp)
 
     for temp in marked_as_tc:
         temp.linkable = True

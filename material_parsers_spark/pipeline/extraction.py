@@ -8,6 +8,15 @@ batch the kernel runs once per distinct text. The hot path is
 shuffle-free — per-turn rows are independent; the only shuffle is the
 rollup.
 
+Per task, a reused Python worker pays a fixed cost before the UDF body
+runs: PySpark's ``worker_util.setup_spark_files`` calls
+``importlib.invalidate_caches()``, which makes every cached
+``zipimporter`` re-read its archive's directory (pyspark.zip, once per
+imported subpackage, py4j and the spark-core jar: ~0.2 CPU-s and up to
+~0.45 s of wall time per task). The UDF drops those cached importers at
+the start of each task (``_drop_zip_importers``), so from a worker's
+third task on that call re-reads nothing.
+
 Plan shape (verified via .explain): parquet scan with pushed filters and a
 two-column ReadSchema -> WholeStageCodegen filter -> ArrowEvalPython ->
 filter + project. No groupBy, no join, no window in the hot path.
@@ -18,6 +27,8 @@ from __future__ import annotations
 import hashlib
 import json
 import pickle
+import sys
+import zipimport
 from functools import lru_cache
 from typing import Callable, Iterator, Optional
 
@@ -87,6 +98,24 @@ _UDFS: dict = {}
 _MATCHERS: dict = {}
 
 
+def _drop_zip_importers() -> None:
+    """Drop this process's cached ``zipimporter`` path finders, so the
+    ``importlib.invalidate_caches()`` before the worker's next task
+    re-reads no zip archive (see the module docstring for the cost).
+
+    ``sys.path_importer_cache`` is only a cache: ``PathFinder`` rebuilds a
+    dropped entry through ``sys.path_hooks`` when an import next needs it,
+    and a new ``zipimporter`` reads zipimport's own directory cache, not
+    the archive; that cache stays right because Spark does not rewrite a
+    shipped archive in place unless ``spark.files.overwrite`` is set.
+    Loaded modules keep their own loaders, so their
+    ``importlib.resources`` reads, from a ``--py-files`` zip too, still
+    work. Top-level, so the UDF pickles it by reference."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
 def _worker_matcher(digest: str, patterns):
     """This Python worker's trie for one pattern set: built from the
     broadcast on first use, then reused by every later task the worker
@@ -127,6 +156,7 @@ def _extraction_udf(sc: SparkContext, pattern_list: list,
         # imported inside the UDF so executors resolve it locally
         from ..kernel.turns import extract_turn
 
+        _drop_zip_importers()
         matcher = _worker_matcher(digest, broadcast_patterns)
         for batch in batches:
             # one kernel call per distinct text in the batch; a repeated
@@ -164,8 +194,13 @@ def _extract(turns: DataFrame, patterns: Optional[list],
     ``pa.array``, with no pandas conversion either way. It is made once
     per session and argument set (see ``_extraction_udf``), every call
     with the same patterns shares one pattern broadcast, and each Python
-    worker builds the trie once. ``text_of`` maps each input value to the
-    text the kernel reads (the web path passes its main-content strip).
+    worker builds the trie once. At the start of each task the worker
+    drops its cached zip importers (``_drop_zip_importers``), so the next
+    task's ``importlib.invalidate_caches()`` re-reads no zip archive. This
+    is safe: zip-loaded modules keep their loaders, and a later import
+    builds a new importer from zipimport's directory cache. ``text_of``
+    maps each input value to the text the kernel reads (the web path
+    passes its main-content strip).
     The cheap null/empty filter runs JVM-side before any Python is
     invoked; a text that only turns out empty in Python comes back with
     null spans and is dropped after the UDF."""
