@@ -1,42 +1,45 @@
 """Merged-token document model (operators T7-T8, X1-X3 in SURVEY.md §2.2/§2.9).
 
 Replaces the reference's spaCy substrate (`linking/linking_module.py:39-297`)
-with a plain parser-free token array. After entity merging, all downstream
-code (Tc classifier, resolvers) only needs, per token: its text, character
-offset (`idx`), token index (`i`), entity type, and link attributes — exactly
-the surface spaCy Token exposes in the reference. Noun-chunk merging (X2,
-parser-dependent) is intentionally not replicated; the reference fixtures are
-the arbiter (SURVEY.md §7.4.2).
+with parallel arrays. After entity merging, the Tc classifier and the
+resolvers need, per merged token, its text and character offset, and per
+entity token also its token index (`i`), entity type and link attributes:
+the surface spaCy Token exposes in the reference. ``MergedDoc`` keeps the
+texts and offsets of all merged tokens in two lists and makes an object,
+a ``MergedToken``, only for each entity. Noun-chunk merging (X2,
+parser-dependent) is intentionally not replicated; the reference fixtures
+are the arbiter (SURVEY.md §7.4.2).
 """
 
 from __future__ import annotations
 
 import hashlib
 import re
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from functools import lru_cache
+from itertools import accumulate, compress
+from operator import itemgetter
 from typing import List, Optional, Tuple
 
 
-@dataclass(slots=True)
+@dataclass(slots=True, eq=False)
 class MergedToken:
-    """One token after entity merging; mirrors the spaCy Token surface.
+    """One entity token after merging; mirrors the spaCy Token surface.
 
-    ``slots=True`` because the kernel allocates tens of these per turn at
-    millions of turns per executor: slotted instances allocate faster and
-    make every attribute read in the classifier/resolver hot loops a
-    fixed-offset load instead of a dict lookup."""
+    ``slots=True`` because the kernel makes one per entity at millions of
+    turns per executor: slotted instances allocate faster and make every
+    attribute read in the classifier/resolver hot loops a fixed-offset
+    load instead of a dict lookup. ``eq=False`` keeps identity equality
+    and the C-level identity hash, which the resolvers' sets and dicts
+    call on every lookup."""
 
     text: str
     idx: int                   # character offset into the document text
     i: int = 0                 # token index after merging
-    whitespace: bool = False   # trailing space
-    ent_type: str = ""         # "" for plain tokens
+    ent_type: str = ""
     id: Optional[str] = None
     links: list = field(default_factory=list)
     linkable: bool = False
-    formatted_text: str = ""
-    bounding_boxes: list = field(default_factory=list)
 
     def __len__(self) -> int:  # spaCy Token.__len__ = character count
         return len(self.text)
@@ -44,53 +47,51 @@ class MergedToken:
     def __str__(self) -> str:
         return self.text
 
-    def __hash__(self):
-        return id(self)
-
-    @property
-    def text_with_ws(self) -> str:
-        return self.text + (" " if self.whitespace else "")
-
 
 class MergedDoc:
-    """Token sequence with spaCy Doc slice-text semantics."""
+    """Merged tokens as parallel lists, with spaCy Doc slice-text semantics.
 
-    def __init__(self, tokens: List[MergedToken]):
-        self.tokens = tokens
-        for index, token in enumerate(tokens):
-            token.i = index
-        # token TEXTS are immutable after construction (only ent/link
-        # attrs mutate), so the document text is computed once and
-        # slices are O(1) char ranges into it via token offsets
-        self._text: Optional[str] = None
+    ``texts[k]`` is merged token ``k``'s text and ``starts[k]`` its
+    character offset in ``text``; iterating the doc yields its entity
+    tokens, in order, and ``len(doc)`` counts all merged tokens.
+    ``separator_index`` is the resolvers' index of the separators in
+    ``text``, built on first use (``resolvers.calculate_distances``)."""
+
+    __slots__ = ("text", "texts", "starts", "entities", "separator_index")
+
+    def __init__(self, text: str, texts: List[str], starts: List[int],
+                 entities: List[MergedToken]):
+        self.text = text
+        self.texts = texts
+        self.starts = starts
+        self.entities = entities
+        self.separator_index: Optional[tuple] = None
 
     def __iter__(self):
-        return iter(self.tokens)
+        return iter(self.entities)
 
     def __len__(self):
-        return len(self.tokens)
-
-    def __getitem__(self, key):
-        return self.tokens[key]
+        return len(self.texts)
 
     def slice_text(self, start: int, end: int) -> str:
-        """Text of tokens [start, end) — trailing whitespace stripped,
-        matching spaCy ``doc[i:j].text``."""
-        start = max(start, 0)
-        toks = self.tokens[start:end]
-        if not toks:
+        """Text of merged tokens [start, end), ``0 <= start`` and
+        ``end <= len(doc)``: from the first one's start to the last one's
+        end, so trailing whitespace is stripped, matching spaCy
+        ``doc[i:j].text``."""
+        if start >= end:
             return ""
-        last = toks[-1]
-        return self.text[toks[0].idx:last.idx + len(last.text)]
+        return self.text[self.starts[start]:
+                         self.starts[end - 1] + len(self.texts[end - 1])]
 
-    @property
-    def text(self) -> str:
-        if self._text is None:
-            self._text = "".join(t.text_with_ws for t in self.tokens)
-        return self._text
-
-    def __str__(self) -> str:
-        return self.text
+    def indices(self, text: str) -> List[int]:
+        """Indices of the merged tokens whose text equals ``text``."""
+        found, index = [], -1
+        try:
+            while True:
+                index = self.texts.index(text, index + 1)
+                found.append(index)
+        except ValueError:
+            return found
 
 
 @lru_cache(maxsize=65536)
@@ -101,174 +102,141 @@ def compute_span_id(text: str, type_: str, offset_start, offset_end,
     Memoized: identical spans (same surface, type, position) recur heavily
     across a corpus — repeated entities at template-stable offsets — and
     the arguments are exactly the cache key."""
-    payload = "".join(
-        str(part) for part in
-        [text, type_, offset_start, offset_end, token_start, token_end, source]
-    )
+    payload = (f"{text}{type_}{offset_start}{offset_end}"
+               f"{token_start}{token_end}{source}")
     return str(int(hashlib.sha1(payload.encode("utf-8")).hexdigest()[:15], 16))
 
 
-def build_doc(words: List[str], spaces: List[bool], spans: List[dict]) -> MergedDoc:
-    """init_doc equivalent (`linking_module.py:61-121`) without the parser.
-
-    Each span [token_start, token_end) over ``words`` becomes ONE merged
-    token carrying the span attributes; all other words become plain tokens.
-    Character offsets are accumulated from words+spaces.
-    """
-    offsets = []
-    offset = 0
-    for word, space in zip(words, spaces):
-        offsets.append(offset)
-        offset += len(word) + (1 if space else 0)
-
-    boundaries = sorted(spans, key=lambda s: s["token_start"])
-    merged: List[MergedToken] = []
-    index = 0
-    span_pos = 0
-    while index < len(words):
-        span = boundaries[span_pos] if span_pos < len(boundaries) else None
-        if span is not None and index == span["token_start"]:
-            end = span["token_end"]
-            text = "".join(
-                words[k] + (" " if spaces[k] and k < end - 1 else "")
-                for k in range(index, end)
-            )
-            merged.append(MergedToken(
-                text=text,
-                idx=offsets[index],
-                whitespace=spaces[end - 1],
-                ent_type=span.get("type", ""),
-                id=str(span["id"]) if span.get("id") is not None else None,
-                links=list(span.get("links") or []),
-                linkable=bool(span.get("linkable", False)),
-                formatted_text=span.get("formattedText", "") or "",
-                bounding_boxes=list(span.get("boundingBoxes") or []),
-            ))
-            index = end
-            span_pos += 1
-        else:
-            merged.append(MergedToken(
-                text=words[index], idx=offsets[index],
-                whitespace=spaces[index],
-            ))
-            index += 1
-
-    return MergedDoc(merged)
+# runs of two or more " " tokens, and a " " token that opens the document,
+# over the "token is not a single space" mask
+_SPACE_RUNS = re.compile(rb"\x00\x00+|^\x00")
 
 
-def merge_phrase_spans(doc: MergedDoc,
-                       phrase_spans: List[Tuple[int, int]]) -> MergedDoc:
-    """X2: noun-chunk merging mechanism (`linking_module.py:99-117,292-297`).
+def _word_mask(tokens: List[str]) -> bytes:
+    """1 for each token that starts a word, 0 for each " " token folded
+    into the word before it as its trailing space (T8,
+    `linking_module.py:157-290`).
 
-    Merge each token span [start, end) into ONE plain token, exactly like
-    the reference's retokenizer.merge over noun chunks: merged text is the
-    covered text (internal whitespace kept, trailing whitespace becomes the
-    merged token's flag), char offsets of every other token are unchanged.
-    Spans must not overlap each other or entity tokens (the reference
-    skips entity-overlapping chunks; overlapping merges raise there too).
+    A word takes the " " token after it as its trailing space. In a run of
+    " " tokens the word before the run takes the first; the second starts
+    a word of its own and takes the third, and so on. A document-initial
+    " " token has no word before it: it starts a word and takes no space,
+    so in a run at the document start the first two start words."""
+    mask = bytes([token != " " for token in tokens])
+    if not mask.startswith(b"\x00") and b"\x00\x00" not in mask:
+        return mask
+    unfolded = bytearray(mask)
+    for run in _SPACE_RUNS.finditer(mask):
+        start, end = run.span()
+        unfolded[start + 1:end:2] = b"\x01" * len(range(start + 1, end, 2))
+        if start == 0:
+            unfolded[0] = 1
+    return bytes(unfolded)
 
-    The chunk SELECTION in the reference comes from en_core_web_sm's
-    statistical parser and is not reproducible without the model; this
-    function provides the merge semantics so any selector can be plugged
-    in (see tests/test_reference_differential.py for the proof that no
-    selection changes resolver distances).
-    """
-    ordered = sorted(phrase_spans)
-    for (a, b), (c, _) in zip(ordered, ordered[1:]):
-        if c < b:
-            raise ValueError(f"overlapping phrase spans: ({a},{b}) ({c},_)")
-    out: List[MergedToken] = []
-    index = 0
+
+def _word_ranges(spans: List[dict], mask: bytes) -> List[list]:
+    """``[word_start, word_end, span]`` for each span the reference's
+    token conversion keeps, in its order (T8, `linking_module.py:157-290`).
+
+    A span's raw token indices map to word indices: the number of words
+    before them. The reference walks the tokens once with one current
+    span, rewriting that span's indices in place, so its quirks carry
+    over: a span still open at the last token ends before that token's
+    word, a span the walk never reaches is dropped, a span that ends
+    before it starts keeps its raw start, and the last span can be kept
+    twice, both entries showing its final indices. This walk jumps
+    between the indices where a branch can fire, so it costs O(spans)
+    steps plus one O(tokens) count over the mask."""
+    ranges: List[list] = []
+    if not spans:
+        return ranges
+    last = len(mask) - 1
     pos = 0
-    while index < len(doc.tokens):
-        span = ordered[pos] if pos < len(ordered) else None
-        if span is not None and index == span[0]:
-            start, end = span
-            toks = doc.tokens[start:end]
-            if any(t.ent_type for t in toks):
-                raise ValueError(
-                    f"phrase span ({start},{end}) overlaps an entity token")
-            out.append(MergedToken(
-                text="".join(t.text_with_ws for t in toks[:-1])
-                     + toks[-1].text,
-                idx=toks[0].idx,
-                whitespace=toks[-1].whitespace,
-            ))
-            index = end
-            pos += 1
-        else:
-            # copy: MergedDoc.__init__ rewrites token.i, and the input
-            # doc must keep its own indices
-            out.append(replace(doc.tokens[index]))
-            index += 1
-    return MergedDoc(out)
-
-
-def convert_tokens(tokens: List[dict], spans: List[dict]) -> Tuple[List[str], List[bool], List[dict]]:
-    """Grobid-token -> (words, spaces, remapped spans) conversion (T8).
-
-    Re-expresses `linking_module.py:157-290`: single space tokens following a
-    word are folded into a trailing-space flag; span token indexes are
-    remapped to the compacted array in the same pass. Mutates the span dicts
-    like the reference (callers copy first).
-    """
-    out_words: List[str] = []
-    out_spaces: List[bool] = []
-    out_spans: List[dict] = []
-
-    skip = False
+    current = [spans[0]["token_start"], spans[0]["token_end"], spans[0]]
     inside = False
-    new_index = 0
-    span_pos = 0
-    span = spans[span_pos] if spans else None
+    index = counted = words = 0   # words = mask.count(1, 0, counted)
+    while True:
+        start, end = current[0], current[1]
+        # the next index at which one of the three branches can fire
+        event = last + 1
+        if index <= start < event:
+            event = start
+        if index <= end < event:
+            event = end
+        if inside and index <= last < event:
+            event = last
+        if event > last:
+            break
+        index = event
+        words += mask.count(1, counted, index)
+        counted = index
+        if index == start:
+            current[0], inside = words, True
+        elif index == end:
+            current[1] = words
+            ranges.append(current)
+            inside = False
+            if pos + 1 < len(spans):
+                pos += 1
+                span = spans[pos]
+                current = [span["token_start"], span["token_end"], span]
+                if index == current[0]:
+                    current[0], inside = words, True
+        elif inside:   # index == last
+            current[1] = words
+            ranges.append(current)
+            inside = False
+        index += 1
+    if inside and len(ranges) != len(spans):
+        current[1] = words + mask.count(1, counted)
+        ranges.append(current)
+    return ranges
 
-    for index, token in enumerate(tokens):
-        if span is not None:
-            if index == span["token_start"]:
-                span["token_start"] = new_index
-                inside = True
-            elif index == span["token_end"]:
-                span["token_end"] = new_index
-                out_spans.append(span)
-                inside = False
-                if span_pos + 1 < len(spans):
-                    span_pos += 1
-                    span = spans[span_pos]
-                    if index == span["token_start"]:
-                        span["token_start"] = new_index
-                        inside = True
-            elif index + 1 == len(tokens) and inside:
-                # last token and the entity is still open
-                span["token_end"] = new_index
-                out_spans.append(span)
-                inside = False
 
-        if skip:
-            skip = False
-            continue
+def build_doc(tokens: List[str], spans: List[dict]) -> MergedDoc:
+    """The merged-token doc of ``tokens`` (the kernel's token strings,
+    space tokens included) and ``spans`` (dicts indexing ``tokens`` by
+    ``token_start``/``token_end``): the reference's token conversion
+    (T8) and ``init_doc`` (X1, `linking_module.py:61-121`) without the
+    parser, and with no Python-level step per token.
 
-        text = token["text"]
-        out_words.append(text)
-        # every token folds a following single-space token into its
-        # whitespace flag — except a document-initial space token, which the
-        # reference emits with space=False unconditionally
-        if (
-            (index > 0 or text != " ")
-            and index + 1 < len(tokens)
-            and tokens[index + 1]["text"] == " "
-        ):
-            out_spaces.append(True)
-            skip = True
-        else:
-            out_spaces.append(False)
+    Single " " tokens fold into the word before them (``_word_mask``);
+    the words and their offsets are ``compress``/``accumulate`` passes
+    over the tokens. Each span the conversion keeps (``_word_ranges``, a
+    walk over the spans) becomes ONE entity token over its words,
+    carrying the span's type, id, links and ``linkable``; every other
+    word is a plain merged token. ``doc.text`` is ``"".join(tokens)``.
+    The spans are read, never written."""
+    text = "".join(tokens)
+    mask = _word_mask(tokens)
+    words = list(compress(tokens, mask))
+    offsets = list(compress(accumulate(map(len, tokens), initial=0), mask))
 
-        new_index += 1
-
-    if inside and len(out_spans) != len(spans):
-        span["token_end"] = new_index
-        out_spans.append(span)
-
-    return out_words, out_spaces, out_spans
+    texts: List[str] = []
+    starts: List[int] = []
+    entities: List[MergedToken] = []
+    index = 0
+    for start, end, span in sorted(_word_ranges(spans, mask),
+                                   key=itemgetter(0)):
+        if not index <= start < len(words):
+            break
+        texts += words[index:start]
+        starts += offsets[index:start]
+        idx = offsets[start]
+        merged = (text[idx:offsets[end - 1] + len(words[end - 1])]
+                  if end > start else "")
+        span_id = span.get("id")
+        entities.append(MergedToken(
+            merged, idx, len(texts), span.get("type", ""),
+            str(span_id) if span_id is not None else None,
+            list(span.get("links") or []),
+            bool(span.get("linkable", False))))
+        texts.append(merged)
+        starts.append(idx)
+        index = end
+    texts += words[index:]
+    starts += offsets[index:]
+    return MergedDoc(text, texts, starts, entities)
 
 
 _SENTENCE_BOUNDARY = re.compile(r"[.!?]+[\s]+(?=[\"'(\[]?[A-Z])")

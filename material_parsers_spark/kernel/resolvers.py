@@ -8,13 +8,16 @@ different sentences of that turn. Distances are character-centroid
 based and must match the reference's golden values digit-for-digit
 (`tests/test_relationship_resolver.py:425-468`: 7.5, 18, 27.0, 23.5) —
 including the reference's unparenthesized ``abs(pivot - start_idx + L/2)``
-distance for parenthesis-wrapped values.
+distance for parenthesis-wrapped values. Plain tokens are read by index
+from ``doc.texts``/``doc.starts``; only entities are ``MergedToken``s.
 
 Cost over a doc of n characters with M materials and T Tc values:
 ``calculate_distances`` is O(n + M·T). Each tc's neighbour materials,
 parenthesis window and anchor are found once (O(M) plus the window), and
-each (material, tc) pair's separator test is one lookup in an O(n)
-"nearest separator end from here" index. The greedy assignment in
+each (material, tc) pair's separator test is one compare: the "first
+separator end from here" of the chunk's start, looked up once per tc and
+once per material by bisection in the index of the doc's separator
+occurrences, built once per doc. The greedy assignment in
 ``vicinity_resolution`` is O(M·T): ``assigned`` is a set, and
 ``MergedToken`` hashes by identity, so a lookup calls no dataclass
 ``__eq__``.
@@ -23,17 +26,13 @@ each (material, tc) pair's separator test is one lookup in an O(n)
 from __future__ import annotations
 
 import math
-import re
+from bisect import bisect_left
 from itertools import accumulate
 from typing import Dict, List, Optional, Set, Tuple
 
 from .doc import MergedDoc, MergedToken
 
 SEPARATORS = [",", ".", ";", "and", "but", "while", "whereas", "which", "although"]
-# every start of a separator occurrence, overlapping ones included; the
-# shortest separator that matches at a start comes first
-_SEPARATOR_STARTS = re.compile("(?=(%s))" % "|".join(
-    re.escape(sep) for sep in sorted(SEPARATORS, key=len)))
 
 OPENING_PARENTHESIS = ["(", "[", "{"]
 CLOSING_PARENTHESIS = [")", "]", "}"]
@@ -104,15 +103,31 @@ def find_following_entity(pivot: MergedToken, items: List[MergedToken],
     return find_closer_to_pivot(pivot, after)
 
 
-def _separator_ends(text: str) -> List[float]:
-    """For each position p of ``text`` (and one past its end), the smallest
-    end of a ``SEPARATORS`` occurrence that starts at or after p, or
-    infinity. ``text[s:e]`` holds a separator iff ``ends[s] <= e``, with
-    the substring semantics of ``sep in chunk`` ("and" matches in "band")."""
-    ends: List[float] = [math.inf] * (len(text) + 1)
-    for match in _SEPARATOR_STARTS.finditer(text):
-        ends[match.start()] = match.start() + len(match.group(1))
-    return list(accumulate(reversed(ends), min))[::-1]
+def _separator_index(text: str) -> Tuple[List[int], List[int]]:
+    """Every occurrence of a ``SEPARATORS`` entry in ``text``, overlapping
+    ones included, as ``(starts, ends)``: the occurrence starts in order,
+    and ``ends[k]`` the smallest end of occurrence k and the ones after
+    it. ``text[s:e]`` holds a separator iff an occurrence starting at or
+    after s ends at or before e (``_separator_end(index, s) <= e``), the
+    substring semantics of ``sep in chunk`` ("and" matches in "band")."""
+    occurrences = []
+    for separator in SEPARATORS:
+        start = text.find(separator)
+        while start >= 0:
+            occurrences.append((start, start + len(separator)))
+            start = text.find(separator, start + 1)
+    occurrences.sort()
+    ends = list(accumulate(reversed([end for _, end in occurrences]), min))
+    return [start for start, _ in occurrences], ends[::-1]
+
+
+def _separator_end(index: Tuple[List[int], List[int]],
+                   position: int) -> float:
+    """The smallest end of a separator occurrence starting at or after
+    ``position``, or infinity."""
+    starts, ends = index
+    k = bisect_left(starts, position)
+    return ends[k] if k < len(ends) else math.inf
 
 
 def calculate_distances(materials: List[MergedToken],
@@ -127,20 +142,23 @@ def calculate_distances(materials: List[MergedToken],
 
     Each tc's neighbour materials, parenthesis window and anchor are
     computed once, and each pair's separator test is one lookup in
-    ``_separator_ends``.
+    the doc's ``_separator_index``, built on its first call.
     """
-    separator_ends = _separator_ends(doc.text)
+    if doc.separator_index is None:
+        doc.separator_index = _separator_index(doc.text)
+    separators = doc.separator_index
+    texts, starts = doc.texts, doc.starts
 
-    def has_separator(start: int, end: int) -> bool:
-        """Whether ``doc.slice_text(start, end)`` holds a separator."""
-        if start >= end:
-            return False
-        last = doc[end - 1]
-        return separator_ends[doc[start].idx] <= last.idx + len(last.text)
+    def end_of(index: int) -> int:
+        """Character end of merged token ``index``."""
+        return starts[index] + len(texts[index])
 
-    # per tc: the chunk bounds (the opening parenthesis or the tc, the
-    # token after the closing parenthesis or after the tc) and the
-    # distance terms: abs(pivot_centroid - offset + half)
+    # the chunk between a pair is the slice of the tokens strictly between
+    # the material and the tc's anchor window; it holds a separator iff
+    # the first separator end from the chunk's start is <= the chunk's
+    # end. Per tc: the window [left, right), the distance terms of
+    # abs(pivot_centroid - offset + half), the end of the chunk left of
+    # the window and the separator end from the chunk right of it.
     anchors = []
     for tc_value in tc_values:
         previous_material = find_previous_entity(tc_value, materials)
@@ -159,31 +177,45 @@ def calculate_distances(materials: List[MergedToken],
 
         # a parenthesis inside a merged entity token is no standalone
         # token: without one on each side, measure unparenthesized
-        openings = [t for t in doc[previous_index + 1: tc_value.i]
-                    if str(t) in OPENING_PARENTHESIS] if matched else []
-        closings = [t for t in doc[tc_value.i + 1: following_index]
-                    if str(t) in CLOSING_PARENTHESIS] if matched else []
+        starting = ending = None
+        if matched:
+            starting = next((k for k in range(previous_index + 1, tc_value.i)
+                             if texts[k] in OPENING_PARENTHESIS), None)
+            ending = next((k for k in range(following_index - 1, tc_value.i, -1)
+                           if texts[k] in CLOSING_PARENTHESIS), None)
 
-        if openings and closings:
-            starting, ending = openings[0], closings[-1]
-            wrapped_len = len(doc.slice_text(starting.i, ending.i))
-            anchors.append((starting.i, ending.i + 1, starting.idx,
-                            wrapped_len / 2))
+        if starting is not None and ending is not None:
+            wrapped_len = len(doc.slice_text(starting, ending))
+            left, right = starting, ending + 1
+            offset, half = starts[starting], wrapped_len / 2
         else:
             # x + 0 == x exactly, so this is abs(pivot - centroid)
-            anchors.append((tc_value.i, tc_value.i + 1, _centroid(tc_value),
-                            0))
+            left, right = tc_value.i, tc_value.i + 1
+            offset, half = _centroid(tc_value), 0
+        anchors.append((
+            tc_value, left, right, offset, half,
+            end_of(left - 1) if left > 0 else -1,
+            _separator_end(separators, starts[right])
+            if right < len(doc) else math.inf,
+        ))
 
     mapping: Dict[MergedToken, Dict[MergedToken, float]] = {}
     for material in materials:
         pivot_centroid = _centroid(material)
+        i = material.i
+        # the separator end from the chunk right of the material, and the
+        # end of the chunk left of it
+        after = (_separator_end(separators, starts[i + 1])
+                 if i + 1 < len(doc) else math.inf)
+        before = end_of(i - 1) if i > 0 else -1
         tc_distances: Dict[MergedToken, float] = {}
-        for tc_value, (left, right, offset, half) in zip(tc_values, anchors):
+        for tc_value, left, right, offset, half, left_end, right_separator \
+                in anchors:
             distance = abs(pivot_centroid - offset + half)
-            if material.i < tc_value.i:
-                separated = has_separator(material.i + 1, left)
+            if i < tc_value.i:
+                separated = i + 1 < left and after <= left_end
             else:
-                separated = has_separator(right, material.i)
+                separated = right < i and right_separator <= before
             tc_distances[tc_value] = distance * 2 if separated else distance
         if tc_values:
             mapping[material] = tc_distances
@@ -254,27 +286,22 @@ def vicinity_resolution(doc: MergedDoc,
     elif len(destination_entities) == 1:
         closer = find_closer_to_pivot(destination_entities[0], source_entities)
         relationships.append(link_spans(destination_entities[0], closer, "vicinity"))
-    elif "respectively" in str(doc):
-        respectively_tokens = [t for t in doc if str(t) == "respectively"]
-        if len(respectively_tokens) == 1:
+    elif "respectively" in doc.text:
+        respectively = doc.indices("respectively")
+        if len(respectively) == 1:
             relationships.extend(assign_in_order(destination_entities, source_entities))
         else:
             previous_index = 0
-            for resp in respectively_tokens:
+            for resp in respectively:
                 reduced1 = [t for t in destination_entities
-                            if resp.i > t.i > previous_index]
+                            if resp > t.i > previous_index]
                 reduced2 = [t for t in source_entities
-                            if resp.i > t.i > previous_index]
+                            if resp > t.i > previous_index]
                 relationships.extend(assign_in_order(reduced1, reduced2))
-                previous_index = resp.i
+                previous_index = resp
     else:
         assigned: Set[MergedToken] = set()
         material_tc = calculate_distances(destination_entities, source_entities, doc)
-
-        tc_material: Dict[MergedToken, Dict[MergedToken, float]] = {}
-        for material, distances in material_tc.items():
-            for tc, distance in distances.items():
-                tc_material.setdefault(tc, {})[material] = distance
 
         if len(destination_entities) <= len(source_entities):
             for material, distances in material_tc.items():
@@ -285,6 +312,10 @@ def vicinity_resolution(doc: MergedDoc,
                     relationships.append(link_spans(material, tc, "distance"))
                     assigned.update((material, tc))
         else:
+            tc_material: Dict[MergedToken, Dict[MergedToken, float]] = {}
+            for material, distances in material_tc.items():
+                for tc, distance in distances.items():
+                    tc_material.setdefault(tc, {})[material] = distance
             for tc, distances in tc_material.items():
                 candidates = {m: d for m, d in distances.items()
                               if m not in assigned}

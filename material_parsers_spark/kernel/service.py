@@ -49,10 +49,11 @@ def process_link(paragraphs: List[dict]) -> List[dict]:
     """`POST /process/link` (`service.py:102-122,151-211`): mark linkable
     temperatures, then run every link-type configuration and append the
     new links to the input spans by id — the link stage of
-    ``extract_turn``."""
+    ``extract_turn``, over the texts of the paragraph's token dicts."""
     output = list(paragraphs)
     for paragraph in output:
-        link_paragraph(paragraph["tokens"], paragraph["spans"])
+        link_paragraph([token["text"] for token in paragraph["tokens"]],
+                       paragraph["spans"])
     return output
 
 

@@ -53,7 +53,9 @@ def _is_formula_token(token: str) -> bool:
 
 def tag_spans(tokens: List[str], offsets: List[Tuple[int, int]],
               text: str) -> List[dict]:
-    """Scan the unfiltered token stream and emit typed spans."""
+    """Scan the unfiltered token stream and emit typed spans. The scan
+    moves past every span it emits, so the spans come out in token order
+    and never overlap."""
     spans: List[dict] = []
     n = len(tokens)
 
@@ -192,14 +194,4 @@ def tag_spans(tokens: List[str], offsets: List[Tuple[int, int]],
 
         k += 1
 
-    return [s for s in spans if not _overlaps_earlier(s, spans)]
-
-
-def _overlaps_earlier(span: dict, spans: List[dict]) -> bool:
-    for other in spans:
-        if other is span:
-            return False
-        if (span["token_start"] < other["token_end"]
-                and other["token_start"] < span["token_end"]):
-            return True
-    return False
+    return spans

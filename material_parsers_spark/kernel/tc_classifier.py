@@ -2,11 +2,15 @@
 
 Re-expresses `linking/linking_module.py:432-539` over the merged-token doc:
 a cascade of token-window rules marking <tcValue> spans linkable. All rules
-are token-index arithmetic and exact text-window compares; fixtures at
+are token-index arithmetic and exact text-window compares over
+``doc.texts``/``doc.starts``; the expression lists are grouped by token
+width, so each Tc value costs at most 8 window slices. Fixtures at
 `tests/test_linking_module.py:57-297`.
 """
 
 from __future__ import annotations
+
+from typing import Dict, List, Set, Tuple
 
 from .doc import MergedDoc
 
@@ -33,6 +37,20 @@ TC_EXPRESSIONS_BEFORE = [
 NON_TC_EXPRESSIONS_AFTER = ["higher", "lower"]
 
 
+def _by_width(expressions: List[str]) -> List[Tuple[int, Set[str]]]:
+    """``(width, expressions)`` pairs: an expression's width is its number
+    of " "-separated parts, the number of merged tokens it is compared
+    with."""
+    groups: Dict[int, Set[str]] = {}
+    for expression in expressions:
+        groups.setdefault(len(expression.split(" ")), set()).add(expression)
+    return sorted(groups.items())
+
+
+_NON_TC_BEFORE = _by_width(NON_TC_EXPRESSIONS_BEFORE)
+_TC_BEFORE = _by_width(TC_EXPRESSIONS_BEFORE)
+
+
 def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
     """Rule cascade; sets ``linkable`` on qualifying temperature tokens."""
     temps = [t for t in doc if t.ent_type in TEMP_TYPES]
@@ -41,67 +59,59 @@ def mark_linkable_temperatures(doc: MergedDoc) -> MergedDoc:
 
     tc_texts = {t.text for t in doc if t.ent_type in TC_TYPES}
 
-    # MergedToken hashes by identity: these sets never call __eq__
-    marked_as_tc = set()
-    marked_as_non_tc = set()
-
-    if "respectively" in str(doc):
+    if "respectively" in doc.text:
         # rule 1: with a tc expression present, every temp before the last
-        # "respectively" is linkable
-        if tc_texts:
-            respectively = [t for t in doc if str(t) == "respectively"]
-            last = respectively[-1]
-            marked_as_tc.update(t for t in temps if last.i > t.i)
-    else:
-        for index_t, temp in enumerate(temps):
-            if temp in marked_as_tc:
-                continue
+        # "respectively" token is linkable. When "respectively" only
+        # occurs inside a longer token ("irrespectively"), rules 2-6 run
+        # instead: the reference takes the last of no tokens and raises.
+        if not tc_texts:
+            return doc
+        respectively = doc.indices("respectively")
+        if respectively:
+            for temp in temps:
+                if temp.i < respectively[-1]:
+                    temp.linkable = True
+            return doc
 
-            # rule 2: Celsius (or anything not ending in K) rejected
-            if not temp.text.rstrip().lower().endswith("k"):
-                continue
+    text, texts, starts = doc.text, doc.texts, doc.starts
+    for index_t, temp in enumerate(temps):
+        i = temp.i
 
-            # rule 3: reject when followed by "higher"/"lower"
-            for expr in NON_TC_EXPRESSIONS_AFTER:
-                if temp.i + 1 < len(doc) and doc[temp.i + 1].text.lower() == expr:
-                    marked_as_non_tc.add(temp)
-                    break
-            if temp in marked_as_non_tc:
-                continue
+        # rule 2: Celsius (or anything not ending in K) rejected
+        if not temp.text.rstrip().lower().endswith("k"):
+            continue
 
-            # rule 4: reject when preceded by a non-Tc expression
-            for expr in NON_TC_EXPRESSIONS_BEFORE:
-                width = len(expr.split(" "))
-                if temp.i - width >= 0 and doc.slice_text(temp.i - width, temp.i) == expr:
-                    marked_as_non_tc.add(temp)
-                    break
-            if temp in marked_as_non_tc:
-                continue
+        # rule 3: reject when followed by "higher"/"lower"
+        if i + 1 < len(texts) and \
+                texts[i + 1].lower() in NON_TC_EXPRESSIONS_AFTER:
+            continue
 
-            # rule 5: accept when preceded (with <=1 token slack) by a Tc
-            # expression
-            for expr in TC_EXPRESSIONS_BEFORE:
-                width = len(expr.split(" "))
-                if temp.i - width >= 0 and \
-                        doc.slice_text(temp.i - width, temp.i).lower() == expr:
-                    marked_as_tc.add(temp)
-                    break
-                if temp.i - width - 1 >= 0 and \
-                        doc.slice_text(temp.i - width - 1, temp.i - 1).lower() == expr:
-                    marked_as_tc.add(temp)
-                    break
-            if temp in marked_as_tc:
-                continue
+        # the windows [i - width, i) and [i - width - 1, i - 1) end where
+        # merged token i - 1 (i - 2) ends
+        end = starts[i - 1] + len(texts[i - 1]) if i >= 1 else 0
+        end_before = starts[i - 2] + len(texts[i - 2]) if i >= 2 else 0
 
-            # rule 6: accept when an extracted <tc> entity text occurs
-            # between the previous temp and this temp (backward scan);
-            # the scanned slices are single tokens, so compare token texts
-            previous_temp_index = temps[index_t - 1].i if index_t > 0 else 0
-            if any(doc[index].text in tc_texts
-                   for index in range(temp.i - 1, previous_temp_index - 1, -1)):
-                marked_as_tc.add(temp)
+        # rule 4: reject when preceded by a non-Tc expression
+        if any(i - width >= 0 and text[starts[i - width]:end] in expressions
+               for width, expressions in _NON_TC_BEFORE):
+            continue
 
-    for temp in marked_as_tc:
-        temp.linkable = True
+        # rule 5: accept when preceded (with <=1 token slack) by a Tc
+        # expression
+        if any((i - width >= 0
+                and text[starts[i - width]:end].lower() in expressions)
+               or (i - width - 1 >= 0
+                   and text[starts[i - width - 1]:end_before].lower()
+                   in expressions)
+               for width, expressions in _TC_BEFORE):
+            temp.linkable = True
+            continue
+
+        # rule 6: accept when an extracted <tc> entity text occurs
+        # between the previous temp and this temp (backward scan); the
+        # scanned slices are single tokens, so compare token texts
+        previous_temp_index = temps[index_t - 1].i if index_t > 0 else 0
+        if not tc_texts.isdisjoint(texts[previous_temp_index:i]):
+            temp.linkable = True
+
     return doc
-

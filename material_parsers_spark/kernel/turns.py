@@ -10,9 +10,10 @@ reference re-tokenizes per stage, `material_parser_ml.py:53` +
 from __future__ import annotations
 
 from bisect import bisect_left, bisect_right
+from operator import attrgetter
 from typing import List, Optional
 
-from .doc import build_doc, compute_span_id, convert_tokens
+from .doc import build_doc, compute_span_id
 from .formulas import formula_to_composition, name_to_formula
 from .gazetteer import TokenTrieMatcher
 from .materials import extract_results
@@ -116,11 +117,10 @@ def extract_turn(text: Optional[str],
         materials = []
 
     # ---- linking (SURVEY §3.2), on copies that carry the material role
-    token_dicts = [{"text": token} for token in tokens]
     linked = [dict(s, type=_MATERIAL_ROLE.get(s["type"], s["type"]),
                    links=[])
               for s in spans]
-    link_paragraph(token_dicts, linked)
+    link_paragraph(tokens, linked)
 
     out_tokens = [
         {"text": tokens[i], "start": offsets[i][0], "end": offsets[i][1]}
@@ -154,47 +154,48 @@ def extract_turn(text: Optional[str],
             "materials": out_materials}
 
 
-def link_paragraph(tokens: List[dict], spans: List[dict]) -> None:
+def link_paragraph(tokens: List[str], spans: List[dict]) -> None:
     """Classify Tc values, then link spans per ``LINK_CONFIGS``.
 
-    ``spans`` index ``tokens`` by ``token_start``/``token_end`` and are
-    converted on copies. The only writes to them: ``linkable`` on each span
-    that becomes an entity token, and each new link appended once to the
-    span's ``links``.
+    ``tokens`` are the token strings, space tokens included, and ``spans``
+    index them by ``token_start``/``token_end``. The only writes to the
+    spans: ``linkable`` on each span that becomes an entity token, and
+    each new link appended once to the span's ``links``.
 
     One merged-token doc serves every configuration: the token boundaries
-    never change between configs, only the linkable marks do, so those are
-    reset per config instead of rebuilding the doc (the reference rebuilds
-    its spaCy doc per linker; at Arrow-batch scale that dominates)."""
-    words, spaces, remapped = convert_tokens(
-        tokens, [dict(span) for span in spans])
-    doc = build_doc(words, spaces, remapped)
-    doc = mark_linkable_temperatures(doc)
+    never change between configs, only the linkable marks do, so each
+    config filters the entity tokens of its two types by the classifier's
+    mark or its forced types instead of rebuilding the doc (the reference
+    rebuilds its spaCy doc per linker; at Arrow-batch scale that
+    dominates). A config only links tokens of its two types, so only
+    those are reset before it and copied out after it."""
+    doc = mark_linkable_temperatures(build_doc(tokens, spans))
 
-    entity_tokens = [t for t in doc if t.ent_type]
     spans_by_id = {str(span["id"]): span for span in spans}
-    for token in entity_tokens:
+    by_type: dict = {}
+    for token in doc:
+        if not token.ent_type:
+            continue
+        by_type.setdefault(token.ent_type, []).append(token)
         span = spans_by_id.get(str(token.id))
         if span is not None:
             span["linkable"] = token.linkable
-    base_linkable = [t.linkable for t in entity_tokens]
 
     for source_type, destination_type, forced_types in LINK_CONFIGS:
-        for token, linkable in zip(entity_tokens, base_linkable):
-            token.linkable = linkable or token.ent_type in forced_types
-            token.links = []
-
-        destinations = [t for t in entity_tokens
-                        if t.ent_type == destination_type and t.linkable]
-        sources = [t for t in entity_tokens
-                   if t.ent_type == source_type and t.linkable]
+        destinations = [t for t in by_type.get(destination_type, ())
+                        if t.linkable or destination_type in forced_types]
+        sources = [t for t in by_type.get(source_type, ())
+                   if t.linkable or source_type in forced_types]
         if not destinations or not sources:
             continue
+        members = sorted(destinations + sources, key=attrgetter("i"))
+        for token in members:
+            token.links = []
 
         if not simple_resolution(destinations, sources):
             vicinity_resolution(doc, destinations, sources)
 
-        for token in entity_tokens:
+        for token in members:
             if not token.links or str(token.id) not in spans_by_id:
                 continue
             links = spans_by_id[str(token.id)].setdefault("links", [])

@@ -30,11 +30,11 @@ import pickle
 import sys
 import zipimport
 from functools import lru_cache
-from typing import Callable, Iterator, Optional
+from typing import Callable, Iterator, List, NamedTuple, Optional
 
 import pyarrow as pa
 from pyspark import SparkContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 
@@ -91,7 +91,8 @@ _NO_TEXT = {"tokens": None, "spans": None, "materials": None}
 
 # driver side: (applicationId, pattern digest) -> that pattern set's
 # broadcast, and (applicationId, pattern digest, include_tokens, text_of)
-# -> the extraction UDF, whose closure holds that broadcast
+# -> the extraction UDF, whose closure holds that broadcast, with the
+# Columns of the plans over it
 _BROADCASTS: dict = {}
 _UDFS: dict = {}
 # worker side: pattern digest -> trie, kept while the Python worker lives
@@ -129,14 +130,27 @@ def _worker_matcher(digest: str, patterns):
     return matcher
 
 
+class _Extraction(NamedTuple):
+    """One session's extraction UDF for one argument set, as the Columns
+    the extraction plans are built from. Each Column operation is a py4j
+    round trip to the JVM, so they are made once, with the UDF, and every
+    later call reuses them."""
+
+    has_text: Column        # non-null, non-empty text: filtered JVM-side
+    extraction: Column      # the UDF call on ``text``
+    has_spans: Column       # the UDF found text: non-null spans
+    ordered: List[Column]   # the output surface of ``extract_ordered``
+
+
 def _extraction_udf(sc: SparkContext, pattern_list: list,
                     include_tokens: bool,
-                    text_of: Optional[Callable[[str], str]]):
-    """The session's extraction UDF for these arguments, made on the first
-    call only. The patterns are broadcast once per pattern set, whatever
-    the other arguments, so the direct and web paths, with or without
-    tokens, share one broadcast. Entries of any other SparkContext are
-    dropped, so the caches hold one context's UDFs and broadcasts."""
+                    text_of: Optional[Callable[[str], str]]) -> _Extraction:
+    """The session's extraction UDF for these arguments, with its plan
+    Columns, made on the first call only. The patterns are broadcast once
+    per pattern set, whatever the other arguments, so the direct and web
+    paths, with or without tokens, share one broadcast. Entries of any
+    other SparkContext are dropped, so the caches hold one context's UDFs
+    and broadcasts."""
     app_id = sc.applicationId
     digest = hashlib.sha256(pickle.dumps(pattern_list)).hexdigest()
     key = (app_id, digest, include_tokens, text_of)
@@ -179,40 +193,58 @@ def _extraction_udf(sc: SparkContext, pattern_list: list,
     # pushes a size(materials)>0 predicate below a downstream explode and
     # re-evaluates the whole Python stage a second time (observed via
     # .explain: two ArrowEvalPython nodes for one query).
-    _UDFS[key] = extract_udf.asNondeterministic()
+    extraction = extract_udf.asNondeterministic()(F.col("text"))
+    turn_idx = F.col("turn_idx")
+    _UDFS[key] = _Extraction(
+        has_text=F.col("text").isNotNull() & (F.length("text") > 0),
+        extraction=extraction,
+        has_spans=F.col("extraction.spans").isNotNull(),
+        ordered=[
+            F.col("conv_id"), turn_idx,
+            (turn_idx + F.lit(1)).cast("int").alias("turn_rank"),
+            F.col("extraction.tokens").alias("tokens"),
+            F.col("extraction.spans").alias("spans"),
+            F.col("extraction.materials").alias("materials"),
+        ])
     return _UDFS[key]
 
 
 def _extract(turns: DataFrame, patterns: Optional[list],
              include_tokens: bool,
-             text_of: Optional[Callable[[str], str]] = None) -> DataFrame:
+             text_of: Optional[Callable[[str], str]] = None,
+             ordered: bool = False) -> DataFrame:
     """Append the ``extraction`` column through the one extraction UDF,
-    keeping only rows with text.
+    keeping only rows with text; with ``ordered``, select the per-turn
+    output surface of ``extract_ordered`` instead.
 
     The UDF is an Arrow scalar-iterator UDF: each batch arrives as a
     ``pyarrow`` string array and leaves as one struct array built with
-    ``pa.array``, with no pandas conversion either way. It is made once
-    per session and argument set (see ``_extraction_udf``), every call
-    with the same patterns shares one pattern broadcast, and each Python
-    worker builds the trie once. At the start of each task the worker
-    drops its cached zip importers (``_drop_zip_importers``), so the next
-    task's ``importlib.invalidate_caches()`` re-reads no zip archive. This
-    is safe: zip-loaded modules keep their loaders, and a later import
+    ``pa.array``, with no pandas conversion either way. It and the plan's
+    Columns are made once per session and argument set (see
+    ``_extraction_udf``), so a repeated call builds its plan in 3 or 4
+    DataFrame operations and few py4j round trips. Every call with the
+    same patterns shares one pattern broadcast, and each Python worker
+    builds the trie once. At the start of each task the worker drops its
+    cached zip importers (``_drop_zip_importers``), so the next task's
+    ``importlib.invalidate_caches()`` re-reads no zip archive. This is
+    safe: zip-loaded modules keep their loaders, and a later import
     builds a new importer from zipimport's directory cache. ``text_of``
     maps each input value to the text the kernel reads (the web path
     passes its main-content strip).
     The cheap null/empty filter runs JVM-side before any Python is
     invoked; a text that only turns out empty in Python comes back with
-    null spans and is dropped after the UDF."""
+    null spans and is dropped after the UDF. Catalyst prunes the scan to
+    the columns the plan reads."""
     pattern_list = patterns if patterns is not None else load_full_patterns()
-    extract_udf = _extraction_udf(turns.sparkSession.sparkContext,
-                                  pattern_list, include_tokens, text_of)
-    return (
+    plan = _extraction_udf(turns.sparkSession.sparkContext, pattern_list,
+                           include_tokens, text_of)
+    extracted = (
         turns
-        .where(F.col("text").isNotNull() & (F.length("text") > 0))
-        .withColumn("extraction", extract_udf(F.col("text")))
-        .where(F.col("extraction.spans").isNotNull())
+        .where(plan.has_text)
+        .withColumn("extraction", plan.extraction)
+        .where(plan.has_spans)
     )
+    return extracted.select(plan.ordered) if ordered else extracted
 
 
 def run_extraction(turns: DataFrame,
@@ -226,28 +258,16 @@ def run_extraction(turns: DataFrame,
     return _extract(turns, patterns, include_tokens)
 
 
-def _ordered(extracted: DataFrame) -> DataFrame:
-    """The per-turn output surface (conv_id, turn_idx, turn_rank, tokens,
-    spans, materials). Under the input contract (turn_idx is the dense
-    0-based order within its conversation) ``turn_rank = turn_idx + 1``
-    is a pure column expression, so the plan has ZERO shuffles: scan ->
-    JVM filter -> Arrow UDF."""
-    return extracted.select(
-        "conv_id", "turn_idx",
-        (F.col("turn_idx") + F.lit(1)).cast("int").alias("turn_rank"),
-        F.col("extraction.tokens").alias("tokens"),
-        F.col("extraction.spans").alias("spans"),
-        F.col("extraction.materials").alias("materials"),
-    )
-
-
 def extract_ordered(turns: DataFrame,
                     patterns: Optional[list] = None,
                     include_tokens: bool = True) -> DataFrame:
-    """Per-turn extraction with a stable per-conversation rank. Column
-    pruning: only (conv_id, turn_idx, text) feed the kernel."""
-    narrow = turns.select("conv_id", "turn_idx", "text")
-    return _ordered(run_extraction(narrow, patterns, include_tokens))
+    """Per-turn extraction with a stable per-conversation rank: the
+    columns (conv_id, turn_idx, turn_rank, tokens, spans, materials).
+    Under the input contract (turn_idx is the dense 0-based order within
+    its conversation) ``turn_rank = turn_idx + 1`` is a pure column
+    expression, so the plan has ZERO shuffles: scan -> JVM filter ->
+    Arrow UDF. Column pruning: only (conv_id, turn_idx, text) are read."""
+    return _extract(turns, patterns, include_tokens, ordered=True)
 
 
 def span_counts_per_conversation(extracted: DataFrame,

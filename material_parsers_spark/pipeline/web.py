@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..kernel.web import main_content
-from .extraction import _extract, _ordered
+from .extraction import _extract
 
 MAIN_CONTENT_TYPE = ("main_text string, n_blocks int, kept_blocks int, "
                      "dropped_chars int")
@@ -193,6 +193,5 @@ def extract_materials_from_html(turns_html: DataFrame,
     Strip and extraction run inside the ONE extraction UDF — each turn's
     text crosses the JVM/Python boundary once, and the stripped text
     never crosses back. A page with no main text yields no row."""
-    narrow = turns_html.select("conv_id", "turn_idx", "text")
-    return _ordered(_extract(narrow, patterns, include_tokens=False,
-                             text_of=_main_text))
+    return _extract(turns_html, patterns, include_tokens=False,
+                    text_of=_main_text, ordered=True)

@@ -1,8 +1,9 @@
 """Fixture builders mirroring the reference's tests/utils.py:29-81 —
 spans are located by first substring occurrence, then token-aligned."""
 
-from material_parsers_spark.kernel.doc import build_doc, convert_tokens
+from material_parsers_spark.kernel.doc import build_doc
 from material_parsers_spark.kernel.tokenizer import tokenize
+from tests.linking_reference import convert_tokens
 
 
 def get_tokens_and_spans(text, input_spans):
@@ -21,8 +22,8 @@ def get_tokens(text, input_spans):
 
 
 def prepare_doc(text, input_spans):
-    words, spaces, spans = get_tokens(text, input_spans)
-    return build_doc(words, spaces, spans)
+    tokens, spans = get_tokens_and_spans(text, input_spans)
+    return build_doc([token["text"] for token in tokens], spans)
 
 
 def calculate_spans(text, spans, tokens=None):

@@ -126,6 +126,45 @@ def test_repeated_calls_make_one_pattern_broadcast(spark, monkeypatch):
         assert len(broadcasts) == 1, marker
 
 
+def test_repeated_calls_build_their_plan_in_few_py4j_round_trips(
+        spark, monkeypatch):
+    """After the first call, which makes the UDF and its plan Columns,
+    building an ``extract_ordered`` plan talks to the JVM at most 40
+    times: the Columns are reused, and only the 4 DataFrame operations
+    and the context lookup cross py4j. Only this thread's commands
+    count, and garbage collection is done before and held off during
+    each call: collecting a py4j object from earlier work sends a release
+    command of its own."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    turns = _frame(spark, TEXTS)
+    extract_ordered(turns, include_tokens=False)
+    commands = []
+    original = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command):
+        if threading.get_ident() == caller:
+            commands.append(command)
+        return original(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    per_call = []
+    for _ in range(3):
+        gc.collect()
+        gc.disable()
+        try:
+            commands.clear()
+            extract_ordered(turns, include_tokens=False)
+            per_call.append(len(commands))
+        finally:
+            gc.enable()
+    assert max(per_call) <= 40, per_call
+
+
 @pytest.mark.parametrize("include_tokens", [True, False])
 def test_repeated_empty_and_null_texts_match_the_kernel(
         spark, matcher, include_tokens):

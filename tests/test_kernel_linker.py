@@ -4,10 +4,7 @@ tests/test_linking_evaluation.py)."""
 
 import pytest
 
-from material_parsers_spark.kernel.doc import (
-    convert_tokens,
-    get_sentence_boundaries,
-)
+from material_parsers_spark.kernel.doc import get_sentence_boundaries
 from material_parsers_spark.kernel.linker import (
     MATERIAL_TC_TYPE,
     TC_PRESSURE_TYPE,
@@ -19,6 +16,7 @@ from material_parsers_spark.kernel.metrics import (
 )
 from material_parsers_spark.kernel.service import process_link
 from tests.fixture_utils import get_tokens, get_tokens_and_spans
+from tests.linking_reference import convert_tokens
 
 
 def test_get_sentence_boundaries_eight_sentences():

@@ -191,3 +191,28 @@ def test_mark_temperatures_paragraph_pipeline():
     assert len(linkable) == 2
     assert out["spans"][0]["linkable"] is True
     assert out["spans"][2]["linkable"] is True
+
+
+def test_respectively_inside_a_word_runs_the_per_value_rules():
+    """"irrespectively" holds "respectively" but no such token: rule 1
+    does not apply, and rule 6 marks the value after the Tc mention."""
+    doc = prepare_doc(
+        "The Tc of MgB 2 is 39 K, irrespectively of the pressure.",
+        [("Tc", "<tc>"), ("MgB 2", "<material>"), ("39 K", "<tcValue>")],
+    )
+    out = linkable_tc_values(mark_linkable_temperatures(doc))
+    assert [t.text for t in out] == ["39 K"]
+
+
+def test_tc_expression_before_with_one_token_slack():
+    """Rule 5 alone, with no <tc> entity for rule 6: a Tc expression
+    right before the value, or one token before it."""
+    for text in ("The material BaClE2 superconducts at 30K.",
+                 "The material BaClE2 superconducts at about 30K."):
+        doc = prepare_doc(text, [("BaClE2", "<material>"),
+                                 ("30K", "<tcValue>")])
+        out = linkable_tc_values(mark_linkable_temperatures(doc))
+        assert [t.text for t in out] == ["30K"], text
+    doc = prepare_doc("The material BaClE2 superconducts at nearly about 30K.",
+                      [("BaClE2", "<material>"), ("30K", "<tcValue>")])
+    assert linkable_tc_values(mark_linkable_temperatures(doc)) == []

@@ -9,13 +9,14 @@ from hypothesis import strategies as st
 from material_parsers_spark.kernel.classify import decompose_formula, get_class
 from material_parsers_spark.kernel.doc import (
     build_doc,
-    convert_tokens,
     get_sentence_boundaries,
 )
 from material_parsers_spark.kernel.formulas import formula_to_composition
+from material_parsers_spark.kernel.tagger import tag_spans
 from material_parsers_spark.kernel.tokenizer import tokenize, tokenize_and_filter
 from material_parsers_spark.kernel.turns import extract_turn
 from material_parsers_spark.kernel.variables import expand_formula, replace_variable
+from tests.linking_reference import convert_tokens
 
 text_strategy = st.text(
     alphabet=string.ascii_letters + string.digits + " .,;()-−≤<>=/[]{}\n\t",
@@ -57,6 +58,31 @@ def test_extract_turn_total_and_consistent(text):
     for material in out["materials"]:
         for resolved in material.get("resolvedFormulas") or []:
             assert resolved["rawValue"]
+
+
+# words the tagger turns into spans (Tc values, pressures, Tc mentions,
+# shapes, variables and values, formulas) and words around them
+TAGGER_WORDS = st.sampled_from([
+    "39", "4", ".", "7", "K", "GPa", "Tc", "T", "c", "critical",
+    "temperature", "superconducts", "thin", "film", "doped", "annealed",
+    "x", "=", "0", ",", "and", "MgB", "2", "La", "Fe", "As", "(", ")", "-",
+    "−", "resistivity", "the", "at",
+])
+
+
+@given(st.lists(TAGGER_WORDS, max_size=60),
+       st.sampled_from([" ", "", "  "]))
+@settings(max_examples=300, deadline=None)
+def test_tag_spans_are_sorted_and_disjoint(words, separator):
+    """The tagger's scan moves past every span it emits, so its spans come
+    out ordered by token and never overlap."""
+    text = separator.join(words)
+    tokens, offsets = tokenize(text)
+    spans = tag_spans(tokens, offsets, text)
+    for span in spans:
+        assert span["token_start"] < span["token_end"]
+    for before, after in zip(spans, spans[1:]):
+        assert before["token_end"] <= after["token_start"]
 
 
 @given(st.text(alphabet=string.ascii_letters + string.digits + "().-−",
@@ -120,7 +146,7 @@ def test_convert_tokens_space_folding(words):
         w + (" " if s else "") for w, s in zip(out_words, out_spaces))
     original = " ".join(words)
     assert rebuilt == original
-    doc = build_doc(out_words, out_spaces, [])
+    doc = build_doc([token["text"] for token in tokens], [])
     assert doc.text == original
     # sentence alignment never raises
     get_sentence_boundaries(out_words, out_spaces)

@@ -1,10 +1,11 @@
 """Differential parity tests against the reference SOURCE (not a port).
 
 When the read-only reference snapshot is present, run its pure-Python
-resolver module and its convert_to_spacy static method directly over OUR doc
-model / token streams and assert identical outputs. This proves our kernel
-re-expresses the reference algorithms exactly, independent of hand-ported
-golden values.
+resolver module and its convert_to_spacy static method directly over the
+object-per-token doc model of ``tests/linking_reference.py`` / token
+streams and assert identical outputs against our kernel. This proves our
+kernel re-expresses the reference algorithms exactly, independent of
+hand-ported golden values.
 """
 
 import ast
@@ -14,9 +15,9 @@ import os
 
 import pytest
 
-from material_parsers_spark.kernel.doc import convert_tokens
 from material_parsers_spark.kernel.resolvers import calculate_distances
-from tests.fixture_utils import get_tokens_and_spans, prepare_doc
+from tests import linking_reference as reference
+from tests.fixture_utils import get_tokens, get_tokens_and_spans, prepare_doc
 
 REFERENCE = "/root/reference/material_parsers"
 
@@ -121,6 +122,11 @@ class _DocShim:
         return self.doc.text
 
 
+def _reference_doc(text, input_spans):
+    """The object-per-token doc the shims wrap."""
+    return reference.build_doc(*get_tokens(text, input_spans))
+
+
 def _load_reference_resolver():
     spec = importlib.util.spec_from_file_location(
         "ref_resolver", f"{REFERENCE}/linking/relationships_resolver.py")
@@ -145,24 +151,26 @@ def _load_reference_convert():
 
 def test_distance_matrix_matches_reference_code():
     ref = _load_reference_resolver()
-    doc = _DocShim(prepare_doc(HAVINGA, HAVINGA_SPANS))
+    doc = _DocShim(_reference_doc(HAVINGA, HAVINGA_SPANS))
     materials = [t for t in doc if t.ent_type_ == "<material>"]
     tcs = [t for t in doc if t.ent_type_ == "<tcValue>"]
 
     theirs = ref.VicinityResolutionResolver().calculate_distances(
         materials, tcs, doc)
 
-    ours = calculate_distances(
-        [t._t for t in materials], [t._t for t in tcs], doc.doc)
+    ours_doc = prepare_doc(HAVINGA, HAVINGA_SPANS)
+    our_materials = [t for t in ours_doc if t.ent_type == "<material>"]
+    our_tcs = [t for t in ours_doc if t.ent_type == "<tcValue>"]
+    ours = calculate_distances(our_materials, our_tcs, ours_doc)
 
-    for material in materials:
-        for tc in tcs:
-            assert theirs[material][tc] == ours[material._t][tc._t]
+    for material, our_material in zip(materials, our_materials):
+        for tc, our_tc in zip(tcs, our_tcs):
+            assert theirs[material][tc] == ours[our_material][our_tc]
 
 
 def test_vicinity_relationships_match_reference_code():
     ref = _load_reference_resolver()
-    doc = _DocShim(prepare_doc(HAVINGA, HAVINGA_SPANS))
+    doc = _DocShim(_reference_doc(HAVINGA, HAVINGA_SPANS))
     materials = [t for t in doc if t.ent_type_ == "<material>"]
     tcs = [t for t in doc if t.ent_type_ == "<tcValue>"]
 
@@ -194,7 +202,8 @@ def test_convert_tokens_matches_reference_code():
     for text, input_spans in cases:
         tokens, spans = get_tokens_and_spans(text, input_spans)
         theirs = ref_convert(copy.deepcopy(tokens), copy.deepcopy(spans))
-        ours = convert_tokens(copy.deepcopy(tokens), copy.deepcopy(spans))
+        ours = reference.convert_tokens(copy.deepcopy(tokens),
+                                        copy.deepcopy(spans))
         assert theirs == ours
 
 
@@ -237,13 +246,12 @@ def test_no_noun_chunking_can_produce_the_stale_goldens():
     (`test_calculate_distances_2`: 27.0/23.5) IS reproduced exactly,
     confirming the arithmetic (centroids + separator penalty) is faithful.
     """
-    from material_parsers_spark.kernel.doc import merge_phrase_spans
-
     ref = _load_reference_resolver()
 
     def golden_triple(merges):
-        base = prepare_doc(HAVINGA, HAVINGA_SPANS)
-        doc = _DocShim(merge_phrase_spans(base, merges) if merges else base)
+        base = _reference_doc(HAVINGA, HAVINGA_SPANS)
+        doc = _DocShim(reference.merge_phrase_spans(base, merges)
+                       if merges else base)
         materials = [t for t in doc if t.ent_type_ == "<material>"]
         tcs = [t for t in doc if t.ent_type_ == "<tcValue>"]
         assert len(materials) == 5 and len(tcs) == 3
@@ -255,7 +263,7 @@ def test_no_noun_chunking_can_produce_the_stale_goldens():
 
     assert golden_triple([]) == (5.5, 5.5, 16.5)
 
-    base = prepare_doc(HAVINGA, HAVINGA_SPANS)
+    base = _reference_doc(HAVINGA, HAVINGA_SPANS)
     single_spans = _admissible_chunk_spans(base)
     assert len(single_spans) > 50  # the sweep is genuinely exhaustive
 
@@ -294,7 +302,7 @@ def test_distances_2_fixture_matches_reference_constants():
             "synthesizing LaTl 3. T c = 1.6 K is then found in LaPb 3.")
     spans = [("LaTl 3", "<material>"), ("T c", "<tc>"),
              ("1.6 K", "<tcValue>"), ("LaPb 3", "<material>")]
-    doc = _DocShim(prepare_doc(text, spans))
+    doc = _DocShim(_reference_doc(text, spans))
     materials = [t for t in doc if t.ent_type_ == "<material>"]
     tcs = [t for t in doc if t.ent_type_ == "<tcValue>"]
     distances = ref.VicinityResolutionResolver().calculate_distances(
