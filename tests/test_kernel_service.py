@@ -71,6 +71,41 @@ def test_process_link_without_both_sides_adds_no_links():
     assert "links" not in out[0]["spans"][0]
 
 
+def test_process_link_keeps_input_links_and_span_types():
+    """A link the request already holds is not added twice, <formula> and
+    <name> spans are not linked as materials (that role is
+    extract_turn's), and every entity span gets ``linkable``."""
+    text = "The material MgB 2 superconducts at 39 K."
+    tokens, spans = get_tokens_and_spans(
+        text, [("MgB 2", "<material>"), ("39 K", "<tcValue>")])
+    material, tc_value = spans
+    material["links"] = [{"targetId": "1", "targetText": "39 K",
+                          "targetType": "<tcValue>", "type": "simple"}]
+    tc_value["links"] = []
+    out = service.process_link(
+        [{"text": text, "tokens": tokens, "spans": spans}])
+    material, tc_value = out[0]["spans"]
+    assert material["links"] == [
+        {"targetId": "1", "targetText": "39 K", "targetType": "<tcValue>",
+         "type": "simple"}]
+    assert tc_value["links"] == [
+        {"targetId": "0", "targetText": "MgB 2", "targetType": "<material>",
+         "type": "simple"}]
+    assert (material["linkable"], tc_value["linkable"]) == (False, True)
+
+    for span_type in ("<formula>", "<name>"):
+        tokens, spans = get_tokens_and_spans(
+            text, [("MgB 2", span_type), ("39 K", "<tcValue>")])
+        for span in spans:
+            del span["linkable"]
+        out = service.process_link(
+            [{"text": text, "tokens": tokens, "spans": spans}])
+        assert [s["type"] for s in out[0]["spans"]] == \
+            [span_type, "<tcValue>"]
+        assert all("links" not in s for s in out[0]["spans"])
+        assert [s["linkable"] for s in out[0]["spans"]] == [False, True]
+
+
 def test_convert_endpoints():
     assert service.convert_formula_to_composition(["CaBr2-x"]) == [
         {"composition": {"Ca": "1", "Br": "2-x"}}]
