@@ -40,6 +40,7 @@ class MergedToken:
     id: Optional[str] = None
     links: list = field(default_factory=list)
     linkable: bool = False
+    span: Optional[dict] = None   # the span this entity token stands for
 
     def __len__(self) -> int:  # spaCy Token.__len__ = character count
         return len(self.text)
@@ -206,7 +207,9 @@ def build_doc(tokens: List[str], spans: List[dict]) -> MergedDoc:
     walk over the spans) becomes ONE entity token over its words,
     carrying the span's type, id, links and ``linkable``; every other
     word is a plain merged token. ``doc.text`` is ``"".join(tokens)``.
-    The spans are read, never written."""
+    The spans are not written here, but each entity token holds its span
+    and the span's own ``links`` list (a fresh one when the span has
+    none), so links appended to the token land on the span."""
     text = "".join(tokens)
     mask = _word_mask(tokens)
     words = list(compress(tokens, mask))
@@ -225,12 +228,12 @@ def build_doc(tokens: List[str], spans: List[dict]) -> MergedDoc:
         idx = offsets[start]
         merged = (text[idx:offsets[end - 1] + len(words[end - 1])]
                   if end > start else "")
-        span_id = span.get("id")
+        span_id, links = span.get("id"), span.get("links")
         entities.append(MergedToken(
             merged, idx, len(texts), span.get("type", ""),
             str(span_id) if span_id is not None else None,
-            list(span.get("links") or []),
-            bool(span.get("linkable", False))))
+            links if links is not None else [],
+            bool(span.get("linkable", False)), span))
         texts.append(merged)
         starts.append(idx)
         index = end

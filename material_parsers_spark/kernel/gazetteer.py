@@ -6,8 +6,10 @@ a token-level trie built once from the pattern dictionary and matched
 case-insensitively (phrase_matcher_attr='LOWER') with leftmost-longest
 semantics, returning original-case text and character offsets.
 
-At Spark scale the trie is built on the driver and broadcast to executors
-(SURVEY.md §4.3); matching runs batch-wise inside an Arrow UDF.
+At Spark scale the pattern list is broadcast and each Python worker
+builds its own trie from it once (``pipeline/extraction.py::
+_worker_matcher``); matching runs batch-wise inside the Arrow extraction
+UDF.
 """
 
 from __future__ import annotations

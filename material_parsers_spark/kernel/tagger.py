@@ -6,7 +6,8 @@ model outside exact-match scope — its own tests inject tagger output
 pluggable tagging stage of our pipeline: a deterministic token-scan tagger
 producing the same span shapes the DL model would, so everything downstream
 (clustering, extraction, linking) is exercised for real at scale. Swapping in
-a real model is a one-function replacement (batched inference via mapInArrow).
+a real model is a one-function replacement (batched inference through the
+pandas UDF in ``pipeline/inference.py::tag_turns``).
 
 Output span dicts: {text, type, offset_start, offset_end, token_start,
 token_end} with token indexes into the UNFILTERED (delimiter-retaining)

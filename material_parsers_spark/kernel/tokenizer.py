@@ -6,8 +6,8 @@ over ~40 delimiter characters (delimiters are kept as tokens) followed by a
 letter<->digit boundary split, with accumulated character offsets.
 
 The functions here are pure and row-independent, which is what lets the Spark
-layer lift them into Arrow-batched pandas UDFs (one Python call per batch,
-never per row).
+layer run them inside Arrow UDFs (one Python call per batch, never per
+row).
 """
 
 from __future__ import annotations

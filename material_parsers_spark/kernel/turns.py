@@ -10,7 +10,7 @@ reference re-tokenizes per stage, `material_parser_ml.py:53` +
 from __future__ import annotations
 
 from bisect import bisect_left, bisect_right
-from operator import attrgetter
+from operator import itemgetter
 from typing import List, Optional
 
 from .doc import build_doc, compute_span_id
@@ -90,18 +90,27 @@ def extract_turn(text: Optional[str],
                 "linkable": False,
             })
 
-    occupied = [(s["offset_start"], s["offset_end"]) for s in spans]
+    # both lists are in offset order and disjoint, so a tagger span
+    # overlaps a match iff it overlaps the first match ending after its
+    # start, spans[pending]
+    n_matched, pending = len(spans), 0
     for span in tag_spans(tokens, offsets, text):
-        if any(span["offset_start"] < e and s < span["offset_end"]
-               for s, e in occupied):
+        while pending < n_matched and \
+                spans[pending]["offset_end"] <= span["offset_start"]:
+            pending += 1
+        if pending < n_matched and \
+                spans[pending]["offset_start"] < span["offset_end"]:
             continue
         spans.append(span)
 
-    spans.sort(key=lambda s: s["offset_start"])
+    # each span dict is built once, in SPAN_TYPE's shape, and is itself
+    # the output row: the link stage writes linkable and links onto it
+    spans.sort(key=itemgetter("offset_start"))
     for span in spans:
         span["id"] = compute_span_id(
             span["text"], span["type"], span["offset_start"],
             span["offset_end"], span["token_start"], span["token_end"])
+        span["links"] = []
 
     # ---- material records (SURVEY §3.1): clusters -> state machine
     clusters = [
@@ -116,92 +125,62 @@ def extract_turn(text: Optional[str],
     if isinstance(materials, dict):  # empty-example sentinel
         materials = []
 
-    # ---- linking (SURVEY §3.2), on copies that carry the material role
-    linked = [dict(s, type=_MATERIAL_ROLE.get(s["type"], s["type"]),
-                   links=[])
-              for s in spans]
-    link_paragraph(tokens, linked)
+    # ---- linking (SURVEY §3.2), <formula>/<name> in the <material> role
+    link_paragraph(tokens, spans, roles=_MATERIAL_ROLE)
 
     out_tokens = [
         {"text": tokens[i], "start": offsets[i][0], "end": offsets[i][1]}
         for i in range(len(tokens))
     ] if include_tokens else []
-    out_spans = [
-        {
-            "id": str(s["id"]),
-            "text": s["text"],
-            "type": s["type"],
-            "offset_start": s["offset_start"],
-            "offset_end": s["offset_end"],
-            "token_start": s["token_start"],
-            "token_end": s["token_end"],
-            "linkable": bool(linked_span.get("linkable", False)),
-            "links": [
-                {
-                    "targetId": str(link.get("targetId")),
-                    "targetText": link.get("targetText"),
-                    "targetType": link.get("targetType"),
-                    "type": link.get("type"),
-                }
-                for link in linked_span["links"]
-            ],
-        }
-        for s, linked_span in zip(spans, linked)
-    ]
-    out_materials = [_material_row(m) for m in materials]
-
-    return {"tokens": out_tokens, "spans": out_spans,
-            "materials": out_materials}
+    return {"tokens": out_tokens, "spans": spans,
+            "materials": [_material_row(m) for m in materials]}
 
 
-def link_paragraph(tokens: List[str], spans: List[dict]) -> None:
+def link_paragraph(tokens: List[str], spans: List[dict], *,
+                   roles: Optional[dict] = None) -> None:
     """Classify Tc values, then link spans per ``LINK_CONFIGS``.
 
     ``tokens`` are the token strings, space tokens included, and ``spans``
-    index them by ``token_start``/``token_end``. The only writes to the
-    spans: ``linkable`` on each span that becomes an entity token, and
-    each new link appended once to the span's ``links``.
+    index them by ``token_start``/``token_end``. The stage writes onto the
+    spans it is given: ``linkable`` on each span that becomes an entity
+    token, and each new link appended once to the span's ``links`` (a
+    link the span already holds is not added again; a span without a
+    ``links`` key gains one only when it is linked). ``roles`` maps a span
+    type to the type it links as; only ``extract_turn`` passes it.
 
-    One merged-token doc serves every configuration: the token boundaries
-    never change between configs, only the linkable marks do, so each
-    config filters the entity tokens of its two types by the classifier's
-    mark or its forced types instead of rebuilding the doc (the reference
-    rebuilds its spaCy doc per linker; at Arrow-batch scale that
-    dominates). A config only links tokens of its two types, so only
-    those are reset before it and copied out after it."""
-    doc = mark_linkable_temperatures(build_doc(tokens, spans))
-
-    spans_by_id = {str(span["id"]): span for span in spans}
+    Each entity token holds its span and shares the span's ``links``
+    list, so the resolvers append to the output directly. One merged-token
+    doc serves every configuration: the token boundaries never change
+    between configs, only the linkable marks do, so each config filters
+    the entity tokens of its two types by the classifier's mark or its
+    forced types instead of rebuilding the doc (the reference rebuilds
+    its spaCy doc per linker; at Arrow-batch scale that dominates)."""
+    bare = [span for span in spans if "links" not in span]
+    for span in bare:
+        span["links"] = []
+    doc = build_doc(tokens, spans)
     by_type: dict = {}
     for token in doc:
-        if not token.ent_type:
-            continue
-        by_type.setdefault(token.ent_type, []).append(token)
-        span = spans_by_id.get(str(token.id))
-        if span is not None:
-            span["linkable"] = token.linkable
+        if roles is not None:
+            token.ent_type = roles.get(token.ent_type, token.ent_type)
+        if token.ent_type:
+            by_type.setdefault(token.ent_type, []).append(token)
+    for token in mark_linkable_temperatures(doc):
+        if token.ent_type:
+            token.span["linkable"] = token.linkable
 
     for source_type, destination_type, forced_types in LINK_CONFIGS:
         destinations = [t for t in by_type.get(destination_type, ())
                         if t.linkable or destination_type in forced_types]
         sources = [t for t in by_type.get(source_type, ())
                    if t.linkable or source_type in forced_types]
-        if not destinations or not sources:
-            continue
-        members = sorted(destinations + sources, key=attrgetter("i"))
-        for token in members:
-            token.links = []
-
-        if not simple_resolution(destinations, sources):
+        if destinations and sources and \
+                not simple_resolution(destinations, sources):
             vicinity_resolution(doc, destinations, sources)
 
-        for token in members:
-            if not token.links or str(token.id) not in spans_by_id:
-                continue
-            links = spans_by_id[str(token.id)].setdefault("links", [])
-            for link in token.links:
-                if link not in links:
-                    links.append(link)
+    for span in bare:
+        if not span["links"]:
+            del span["links"]
 
 
 def _material_row(material: dict) -> dict:

@@ -2377,9 +2377,7 @@ def _minhash_bands(docs: DataFrame) -> DataFrame:
         F.sequence(F.lit(0), F.lit(7)),
         lambda s: F.array_min(F.transform(
             F.col("ngrams"),
-            lambda x: F.conv(
-                F.substring(F.md5(F.concat(x, F.lit(":"), s.cast("string"))),
-                            1, 15), 16, 10).cast("long"))),
+            lambda x: _h(F.concat(x, F.lit(":"), s.cast("string"))))),
     )
     sig_rows = shingled.select(
         "doc_id", F.posexplode(sig).alias("pos", "h"))
@@ -2793,10 +2791,10 @@ def _winnowed_fp_arrays(docs: DataFrame) -> DataFrame:
     # `words` is a materialized attribute here, so element_at is O(1)
     hashes = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(words) - 4, F.lit(0))),
-        lambda i: F.conv(F.substring(F.md5(F.concat_ws(
+        lambda i: _h(F.concat_ws(
             " ", F.element_at(words, i), F.element_at(words, i + 1),
             F.element_at(words, i + 2), F.element_at(words, i + 3),
-            F.element_at(words, i + 4))), 1, 15), 16, 10).cast("long"),
+            F.element_at(words, i + 4))),
     )
     # barrier FIRST, filter on the materialized attribute after —
     # filtering on the projection alias would let pushdown clone the md5
@@ -4537,8 +4535,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read(spark, sf_dir, "documents") \
         .repartition(spark.sparkContext.defaultParallelism)
     words = F.array_distinct(F.split("text", " "))
-    word_hash = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10) \
-        .cast("long")
+    word_hash = _h(F.col("w"))
     hashed = (
         docs.where(F.length(F.trim("text")) > 0)
         .select("doc_id", F.explode(words).alias("w"))

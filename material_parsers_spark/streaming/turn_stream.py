@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline.extraction import run_extraction
 from ..pipeline.schemas import TURNS_SCHEMA
+from ..queries import _h
 
 
 def read_turn_stream(spark: SparkSession, input_dir: str,
@@ -77,8 +78,8 @@ def streaming_exact_dedup(turns: DataFrame,
                           watermark: str = "30 minutes") -> DataFrame:
     """Streaming EXACT DEDUP: emit only the first occurrence of each
     turn text as the stream arrives — the online counterpart of the
-    batch ``dedup_exact`` query (same 60-bit md5-prefix text hash, so
-    the two surfaces agree on what "identical" means).
+    batch ``dedup_exact`` query (the same 60-bit md5-prefix text hash,
+    ``queries._h``, so the two surfaces agree on what "identical" means).
 
     Scale shape: ``dropDuplicatesWithinWatermark`` keys the state store
     on the 16-byte hash, not the payload, and EVICTS seen-hash state
@@ -89,8 +90,7 @@ def streaming_exact_dedup(turns: DataFrame,
     near-simultaneous duplicate (retry storms, fan-out echo) is the
     case that matters, and the periodic batch dedup sweep remains the
     backstop for long-range duplicates."""
-    text_hash = F.conv(F.substring(F.md5("text"), 1, 15), 16, 10) \
-        .cast("long")  # = queries._h — keep the two in lockstep
+    text_hash = _h("text")
     return (
         turns
         .where(F.col("text").isNotNull())

@@ -72,6 +72,21 @@ def sentences(draw):
     return template % tuple(draw(SLOTS[kind]) for kind in slots)
 
 
+def _reference_link_paragraph(calls):
+    """``extract_turn``'s link stage through the reference: the spans in
+    their link roles as copies, then ``linkable`` and the links copied
+    back onto ``extract_turn``'s spans. Counts its runs in ``calls``."""
+    def link_paragraph(tokens, spans, roles):
+        linked = [dict(s, type=roles.get(s["type"], s["type"]), links=[])
+                  for s in spans]
+        reference.link_paragraph(tokens, linked)
+        for span, linked_span in zip(spans, linked):
+            span["linkable"] = bool(linked_span.get("linkable", False))
+            span["links"] = linked_span["links"]
+        calls.append(len(spans))
+    return link_paragraph
+
+
 def _linked(text, stage):
     """Each span's (id, type, linkable, links) when ``link_paragraph`` is
     ``stage``'s (``turns`` or ``reference``), and per vicinity call the
@@ -81,6 +96,9 @@ def _linked(text, stage):
     vicinity = stage.vicinity_resolution
     calculate = (resolvers.calculate_distances if stage is turns
                  else reference.calculate_distances)
+    calls = []
+    link_paragraph = (turns.link_paragraph if stage is turns
+                      else _reference_link_paragraph(calls))
 
     def recording(doc, destinations, sources):
         matrix = calculate(destinations, sources, doc)
@@ -90,11 +108,12 @@ def _linked(text, stage):
         return vicinity(doc, destinations, sources)
 
     with mock.patch.object(stage, "vicinity_resolution", recording), \
-            mock.patch.object(turns, "link_paragraph", stage.link_paragraph):
+            mock.patch.object(turns, "link_paragraph", link_paragraph):
         try:
             out = extract_turn(text, _matcher(), include_tokens=False)
         except IndexError:
             return None
+    assert stage is turns or calls, "the reference link stage did not run"
     spans = [(s["id"], s["type"], s["linkable"], s["links"])
              for s in out["spans"]]
     return spans, matrices

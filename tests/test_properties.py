@@ -2,6 +2,7 @@
 corpus can't exhaustively cover."""
 
 import string
+from functools import lru_cache
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -12,10 +13,19 @@ from material_parsers_spark.kernel.doc import (
     get_sentence_boundaries,
 )
 from material_parsers_spark.kernel.formulas import formula_to_composition
+from material_parsers_spark.kernel.gazetteer import TokenTrieMatcher
 from material_parsers_spark.kernel.tagger import tag_spans
 from material_parsers_spark.kernel.tokenizer import tokenize, tokenize_and_filter
 from material_parsers_spark.kernel.turns import extract_turn
 from material_parsers_spark.kernel.variables import expand_formula, replace_variable
+from material_parsers_spark.pipeline.extraction import load_full_patterns
+from material_parsers_spark.pipeline.transcripts import (
+    CRYSTAL_STRUCTURES,
+    FORMULAS,
+    SPACE_GROUPS,
+    TEMPLATE_SLOTS,
+    TEMPLATES,
+)
 from tests.linking_reference import convert_tokens
 
 text_strategy = st.text(
@@ -58,6 +68,61 @@ def test_extract_turn_total_and_consistent(text):
     for material in out["materials"]:
         for resolved in material.get("resolvedFormulas") or []:
             assert resolved["rawValue"]
+
+
+@lru_cache(maxsize=1)
+def _full_matcher():
+    return TokenTrieMatcher(load_full_patterns())
+
+
+@st.composite
+def template_sentences(draw):
+    template, slots = draw(st.sampled_from(
+        list(zip(TEMPLATES, TEMPLATE_SLOTS))))
+    return template % tuple(draw(TEMPLATE_VALUES[kind]) for kind in slots)
+
+
+TEMPLATE_VALUES = {
+    "F": st.sampled_from(FORMULAS),   # "(Mo 0.96 Zr 0.04 ) 0.85 B 2" included
+    "V": st.integers(3, 299).map(str),
+    "D": st.integers(1, 999).map(str),
+    "C": st.sampled_from(CRYSTAL_STRUCTURES),
+    "G": st.sampled_from(SPACE_GROUPS),
+}
+
+# corpus sentences and the fragments that trip the linker: unmatched
+# brackets, "respectively" inside and outside a longer word, a unicode
+# minus, and the whitespace between them
+TURN_PIECES = st.one_of(
+    template_sentences(), template_sentences(),
+    st.sampled_from(["(", ")", "[", "]", "{", "respectively",
+                     "irrespectively", ", respectively.", "−", "1−x",
+                     "T c =", "39 K", "MgB 2", "."]))
+TURN_SEPARATORS = st.sampled_from([" ", " ", "  ", "\n", " \n ", "\u00a0",
+                                   "\u00a0 ", ""])
+
+
+@given(st.integers(0, 70).flatmap(lambda n: st.lists(
+    st.tuples(TURN_PIECES, TURN_SEPARATORS), min_size=n, max_size=n)))
+@settings(max_examples=150, deadline=None)
+def test_extract_turn_output_invariants_with_the_full_dictionary(pieces):
+    """With the full dictionary, on turns of up to ~3 KB, ``extract_turn``
+    never raises, its span ids are unique, its spans are sorted and
+    disjoint, and every link names another span of the turn that links
+    back with the same type."""
+    text = "".join(piece + separator for piece, separator in pieces)
+    spans = extract_turn(text, _full_matcher(), include_tokens=False)["spans"]
+    by_id = {span["id"]: span for span in spans}
+    assert len(by_id) == len(spans)
+    for before, after in zip(spans, spans[1:]):
+        assert before["offset_end"] <= after["offset_start"]
+    for span in spans:
+        for link in span["links"]:
+            assert link["targetId"] != span["id"]
+            target = by_id[link["targetId"]]
+            assert {"targetId": span["id"], "type": link["type"]} in [
+                {"targetId": back["targetId"], "type": back["type"]}
+                for back in target["links"]]
 
 
 # words the tagger turns into spans (Tc values, pressures, Tc mentions,
