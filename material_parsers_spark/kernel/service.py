@@ -47,13 +47,22 @@ def process_tagged_material(tagged: List[list]) -> List[list]:
 
 def process_link(paragraphs: List[dict]) -> List[dict]:
     """`POST /process/link` (`service.py:102-122,151-211`): mark linkable
-    temperatures, then run every link-type configuration and append the
-    new links to the input spans by id — the link stage of
-    ``extract_turn``, over the texts of the paragraph's token dicts."""
+    temperatures, then run every link-type configuration — the link stage
+    of ``extract_turn``, over the texts of the paragraph's token dicts.
+    ``linkable`` and the new links are written onto the span dicts passed
+    in, each span its own (duplicate ids included); a span without a
+    ``links`` key gains one only when it is linked."""
     output = list(paragraphs)
     for paragraph in output:
+        spans = paragraph["spans"]
+        bare = [span for span in spans if "links" not in span]
+        for span in bare:
+            span["links"] = []
         link_paragraph([token["text"] for token in paragraph["tokens"]],
-                       paragraph["spans"])
+                       spans)
+        for span in bare:
+            if not span["links"]:
+                del span["links"]
     return output
 
 

@@ -143,10 +143,10 @@ def link_paragraph(tokens: List[str], spans: List[dict], *,
     ``tokens`` are the token strings, space tokens included, and ``spans``
     index them by ``token_start``/``token_end``. The stage writes onto the
     spans it is given: ``linkable`` on each span that becomes an entity
-    token, and each new link appended once to the span's ``links`` (a
-    link the span already holds is not added again; a span without a
-    ``links`` key gains one only when it is linked). ``roles`` maps a span
-    type to the type it links as; only ``extract_turn`` passes it.
+    token, and each new link appended once to the span's ``links`` list,
+    which every span must hold (a link the span already holds is not
+    added again). ``roles`` maps a span type to the type it links as;
+    only ``extract_turn`` passes it.
 
     Each entity token holds its span and shares the span's ``links``
     list, so the resolvers append to the output directly. One merged-token
@@ -155,9 +155,6 @@ def link_paragraph(tokens: List[str], spans: List[dict], *,
     the entity tokens of its two types by the classifier's mark or its
     forced types instead of rebuilding the doc (the reference rebuilds
     its spaCy doc per linker; at Arrow-batch scale that dominates)."""
-    bare = [span for span in spans if "links" not in span]
-    for span in bare:
-        span["links"] = []
     doc = build_doc(tokens, spans)
     by_type: dict = {}
     for token in doc:
@@ -177,10 +174,6 @@ def link_paragraph(tokens: List[str], spans: List[dict], *,
         if destinations and sources and \
                 not simple_resolution(destinations, sources):
             vicinity_resolution(doc, destinations, sources)
-
-    for span in bare:
-        if not span["links"]:
-            del span["links"]
 
 
 def _material_row(material: dict) -> dict:

@@ -106,6 +106,25 @@ def test_process_link_keeps_input_links_and_span_types():
         assert [s["linkable"] for s in out[0]["spans"]] == [False, True]
 
 
+def test_process_link_writes_each_span_its_own_links_under_duplicate_ids():
+    """Links and ``linkable`` go onto the span dicts passed in, each span
+    its own, even when the request repeats a span id."""
+    text = "MgB 2 superconducts at 39 K and NbB 2 superconducts at 9 K."
+    tokens, spans = get_tokens_and_spans(
+        text, [("MgB 2", "<material>"), ("39 K", "<tcValue>"),
+               ("NbB 2", "<material>"), ("9 K", "<tcValue>")])
+    for span in spans:
+        span["id"] = "0"
+        span.pop("links", None)
+        del span["linkable"]
+    out = service.process_link(
+        [{"text": text, "tokens": tokens, "spans": spans}])
+    assert out[0]["spans"] is spans
+    assert [s["linkable"] for s in spans] == [False, True, False, True]
+    assert [[l["targetText"] for l in s["links"]] for s in spans] == [
+        ["39 K"], ["MgB 2"], ["9 K"], ["NbB 2"]]
+
+
 def test_convert_endpoints():
     assert service.convert_formula_to_composition(["CaBr2-x"]) == [
         {"composition": {"Ca": "1", "Br": "2-x"}}]

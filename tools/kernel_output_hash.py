@@ -1,9 +1,9 @@
 """Fingerprint and time the Spark-free extraction kernel.
 
 Prints one sha256 per input set of ``extract_turn``'s JSON output
-(``sort_keys``), with ``include_tokens`` True and False, then the best of
-N passes in µs/turn (``include_tokens=False``). Two checkouts that print
-the same hashes give the same kernel output on these inputs.
+(``sort_keys``), with ``include_tokens`` True and False, then the best
+of ``PASSES`` passes in µs/turn (``include_tokens=False``). Two checkouts
+that print the same hashes give the same kernel output on these inputs.
 
 Inputs, all seeded:
 
@@ -16,7 +16,7 @@ Inputs, all seeded:
 
 A turn that raises hashes as its exception's type name.
 
-Usage: python tools/kernel_output_hash.py [--root CHECKOUT] [--passes N]
+Usage: python tools/kernel_output_hash.py [--root CHECKOUT]
 
 ``--root`` is the checkout whose kernel is imported (default: this one),
 so one copy of the script compares two checkouts.
@@ -33,6 +33,7 @@ import sys
 import time
 
 N_TURNS = 1500
+PASSES = 5
 
 
 def template_turns(transcripts, seed: int = 7) -> list:
@@ -74,10 +75,9 @@ def fingerprint(extract_turn, texts: list, matcher,
     return digest.hexdigest()
 
 
-def best_us_per_turn(extract_turn, texts: list, matcher,
-                     passes: int) -> float:
+def best_us_per_turn(extract_turn, texts: list, matcher) -> float:
     best = float("inf")
-    for _ in range(passes):
+    for _ in range(PASSES):
         started = time.perf_counter()
         for text in texts:
             try:
@@ -93,8 +93,6 @@ def main() -> None:
     parser = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     parser.add_argument("--root", default=here,
                         help="checkout whose kernel is imported")
-    parser.add_argument("--passes", type=int, default=5,
-                        help="timed passes per input set (best is kept)")
     args = parser.parse_args()
     root = os.path.abspath(args.root)
     sys.path[:0] = [root, os.path.join(root, "perfbench")]
@@ -118,8 +116,8 @@ def main() -> None:
             print(f"sha256 {name} include_tokens={include_tokens} "
                   f"{fingerprint(extract_turn, texts, matcher, include_tokens)}")
     for name, texts in inputs.items():
-        us = best_us_per_turn(extract_turn, texts, matcher, args.passes)
-        print(f"us_per_turn {name} best_of_{args.passes} {us:.1f}")
+        us = best_us_per_turn(extract_turn, texts, matcher)
+        print(f"us_per_turn {name} best_of_{PASSES} {us:.1f}")
 
 
 if __name__ == "__main__":
